@@ -36,11 +36,17 @@ object Bench {
       case None        => SparkEntry.queries
     }
     var sinceGc = 0
-    def runOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A failing execution reports -1 (its query lands in `failed`), and
+    // its stack trace goes to stderr so the cause is in the log.
+    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+      val err = try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(e) }
       val dt = (System.nanoTime() - t0) / 1e9
+      err.foreach { e =>
+        System.err.println(s"[bench] $name failed:")
+        e.printStackTrace()
+      }
       SessionHygiene.reset(spark)
       // JMH-style forced GC between timed runs: hundreds of queries of
       // generated code + checkpoint blocks otherwise build old-gen
@@ -57,7 +63,7 @@ object Bench {
       // rate-limited run), so the cadence stays tight.
       sinceGc += 1
       if (dt > 1.0 || sinceGc >= 3) { System.gc(); sinceGc = 0 }
-      if (ok) dt else -1.0
+      if (err.isEmpty) dt else -1.0
     }
     // Wall-clock discipline (round 11): the round-10 driver bench
     // timed out (rc 124) because 420 queries x (warm-up + 3 trials) at
@@ -106,30 +112,30 @@ object Bench {
       // generated stages (measured: q76 84s cold vs 5s warm) — that cost
       // is amortized away in any real deployment and only adds noise to
       // the median. Skipped only past the hard wall budget.
-      val warmRef = if (elapsed <= hardBudget) runOnce(fn) else -1.0
-      val t1 = runOnce(fn)
+      val warmRef = if (elapsed <= hardBudget) runOnce(name, fn) else -1.0
+      val t1 = runOnce(name, fn)
       val all =
         if (t1 < 0) Seq(t1)
         else if (t1 > heavyCut || elapsed > softBudget) {
           // heavy (or budget-constrained) query: single trial unless the
           // extra-trial budget allows a confirmation run
           val base =
-            if (t1 > heavyCut && elapsed <= heavyExtraBudget) Seq(t1, runOnce(fn))
+            if (t1 > heavyCut && elapsed <= heavyExtraBudget) Seq(t1, runOnce(name, fn))
             else Seq(t1)
           val ok = base.filter(_ >= 0)
           val anomalous = ok.nonEmpty && (
             ok.max > 1.5 * math.max(ok.min, 0.05) ||
               (warmRef > 0 && ok.max > 1.5 * warmRef + 1.0))
           if (base.contains(-1.0) || !anomalous || elapsed > hardBudget) base
-          else base ++ (1 to 2).map(_ => runOnce(fn))
+          else base ++ (1 to 2).map(_ => runOnce(name, fn))
         }
         else {
-          val first = t1 +: (2 to trials).map(_ => runOnce(fn))
+          val first = t1 +: (2 to trials).map(_ => runOnce(name, fn))
           if (first.contains(-1.0)) first
           else if (first.max > 3.0 * math.max(first.min, 0.05) && first.max - first.min > 1.0)
             // >3x spread (and >1s absolute, so sub-second jitter doesn't
             // trigger): ambient noise hit a trial — 2 more, median of 5
-            first ++ (1 to 2).map(_ => runOnce(fn))
+            first ++ (1 to 2).map(_ => runOnce(name, fn))
           else first
         }
       name -> all
@@ -158,8 +164,11 @@ object Bench {
       "\"" + k + "\":" + ts.map(ms).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = if (meds.nonEmpty) meds.values.filter(_ >= 0).sum else 0.0
+    // the total leaves failed queries out, so they are named explicitly
+    val failed = meds.collect { case (k, v) if v < 0 => k }.toSeq.sorted
+    def names(ks: Seq[String]): String = ks.map("\"" + _ + "\"").mkString("[", ",", "]")
     val selfJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsFull,"trials":$raw,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsFull,"trials":$raw,"failed":${names(failed)},"sf":"$sfDir"}"""
     println(selfJson) // full-name line first: may be cut by the tail, harmless
     try
       java.nio.file.Files.write(
@@ -179,7 +188,7 @@ object Bench {
       val qsShort = included.map { case (k, v) => "\"" + shortKey(k) + "\":" + ms2(v) }
         .mkString("{", ",", "}")
       val rest = if (restN > 0) s""","rest":{"n":$restN,"sec":${ms2(restSec)}}""" else ""
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsShort$rest,"sf":"$sfDir","full_names":"BENCH_SELF.json"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsShort$rest,"failed":${names(failed.map(shortKey))},"sf":"$sfDir","full_names":"BENCH_SELF.json"}"""
     }
     var included = bySize
     var line = lineFor(included, 0, 0.0)

@@ -1467,8 +1467,9 @@ object LlmQueries {
       val vocab = TokenizerStore.loadWordpieceVocab(spark, path)
       val batches = (0L to 2L).map(i =>
         docs.filter(pmod(col("doc_id"), lit(3L)) === i))
-      graft.streaming.ContinualCoverage.replayBatches(
-        vocab, batches, "text", "source")
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualCoverage.service(vocab, "text", "source"),
+        batches)
         .withColumnRenamed("group_key", "source")
         .orderBy(col("batch_id"), col("source"))
     },
@@ -1764,8 +1765,8 @@ object LlmQueries {
       FROM c WHERE doc_id >= 250 ORDER BY doc_id
     """.trim))
 
-  /** Continual packing replay ([[streaming.ContinualPacking
-    * .replayBatches]]): the corpus arrives in three ordered batches;
+  /** Continual packing replay ([[streaming.Continual.replay]] of
+    * [[streaming.ContinualPacking]]): the corpus arrives in three ordered batches;
     * each batch packs against the running one-row (max id, total
     * tokens) state, offsets continuing globally. The oracle packs the
     * FULL corpus with one window cumsum and tags each row with its
@@ -1783,8 +1784,9 @@ object LlmQueries {
         toks.where(col("doc_id") < 170),
         toks.where(col("doc_id") >= 170 && col("doc_id") < 340),
         toks.where(col("doc_id") >= 340))
-      graft.streaming.ContinualPacking.replayBatches(
-        batches, "doc_id", "n_tok", seqLen = 256)
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualPacking.service("doc_id", "n_tok", seqLen = 256),
+        batches)
         .orderBy(col("doc_id"))
     },
     Some("""
@@ -2912,9 +2914,10 @@ object LlmQueries {
       val corpus0 = docs.filter(pmod(col("doc_id"), lit(5L)).isin(1L, 2L))
       val batches = Seq(3L, 4L, 0L).map(m =>
         docs.filter(pmod(col("doc_id"), lit(5L)) === m))
-      graft.streaming.ContinualMinhash.replayBatches(
-        corpus0, batches, "text", "doc_id",
-        hashFn = TextFunctions.fastHash)
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualMinhash.service(corpus0, "text", "doc_id",
+          hashFn = TextFunctions.fastHash),
+        batches)
         .orderBy(col("batch_id"), col("doc_id"))
     },
     Some {
@@ -3639,7 +3642,7 @@ ${round("b2", "c2", 2)}
     """.trim))
 
   /** Continual ANN-index maintenance
-    * ([[graft.streaming.ContinualAnn.replayBatches]], the
+    * ([[graft.streaming.Continual.replay]] of [[graft.streaming.ContinualAnn]], the
     * deterministic replay of the foreachBatch stream): the q400 batch
     * split, itself split into 3 ordered arrival batches; each batch is
     * assigned against the centroids AS THEY STOOD at its arrival,
@@ -3653,7 +3656,7 @@ ${round("b2", "c2", 2)}
   val q406ContinualAnn = HarnessQuery(
     "q406_continual_ann",
     (spark, dir) => {
-      import graft.streaming.ContinualAnn
+      import graft.streaming.{Continual, ContinualAnn}
       val em = Tables.embeddings(spark, dir)
       val centroids0 = em.filter(col("vec_id") >= 8 && col("vec_id") < 16)
         .select((col("vec_id") - 8).cast("int").as("cell"),
@@ -3664,8 +3667,8 @@ ${round("b2", "c2", 2)}
       val incoming = em.filter(pmod(col("vec_id"), lit(10)) === 7)
       val batches = (0 until 3).map(k =>
         incoming.filter(pmod(expr("vec_id div 10"), lit(3)) === k))
-      ContinualAnn.replayBatches(corpus, corpusAssign, centroids0,
-          batches, "vec_id", "embedding", threshold = 0.86)
+      Continual.replay(ContinualAnn.service(corpus, corpusAssign, centroids0,
+          "vec_id", "embedding", threshold = 0.86), batches)
         .orderBy(col("vec_id"))
     },
     Some("""
@@ -5327,7 +5330,7 @@ ${round("b2", "c2", 2)}
     """.trim))
 
   /** Continual-crawl semantic dedup
-    * ([[graft.streaming.ContinualDedup.replayBatches]], the
+    * ([[graft.streaming.Continual.replay]] of [[graft.streaming.ContinualDedup]], the
     * deterministic replay of the foreachBatch stream): the q112 batch
     * split, itself split into 3 ordered arrival batches; each batch is
     * checked against initial corpus + survivors of all earlier batches,
@@ -5338,7 +5341,7 @@ ${round("b2", "c2", 2)}
   val q334ContinualSemanticDedup = HarnessQuery(
     "q334_continual_semantic_dedup",
     (spark, dir) => {
-      import graft.streaming.ContinualDedup
+      import graft.streaming.{Continual, ContinualDedup}
       val em = Tables.embeddings(spark, dir)
       val centroids = em.filter(col("vec_id") < 8)
         .select(col("vec_id").cast("int").as("cell"),
@@ -5347,8 +5350,8 @@ ${round("b2", "c2", 2)}
       val incoming = em.filter(pmod(col("vec_id"), lit(5)) === 0)
       val batches = (0 until 3).map(k =>
         incoming.filter(pmod(expr("vec_id div 5"), lit(3)) === k))
-      ContinualDedup.replayBatches(corpus0, batches, "vec_id", "embedding",
-          centroids, threshold = 0.4)
+      Continual.replay(ContinualDedup.service(corpus0, "vec_id", "embedding",
+          centroids, threshold = 0.4), batches)
         .select(col("vec_id"), col("batch_id"), col("cell"),
           col("is_dup").cast("int").as("is_dup"), col("matched_id"))
         .orderBy(col("vec_id"))
@@ -6598,7 +6601,7 @@ ${round("b2", "c2", 2)}
     * matched_id = smallest overlapping corpus id.
     */
   /** Continual simhash near-dup stream
-    * ([[graft.streaming.ContinualSimhash.replayBatches]]): the q449
+    * ([[graft.streaming.Continual.replay]] of [[graft.streaming.ContinualSimhash]]): the q449
     * fixture under the THIRD dedup family — corpus docs (doc_id % 8
     * = 1) seed the signature index, batch 1 (% 8 = 2) probes and its
     * survivors fold in, batch 2 (% 8 = 3 plus exact clones of early
@@ -6622,9 +6625,10 @@ ${round("b2", "c2", 2)}
         .withColumn("doc_id", col("doc_id") + 1000000L)
       val b2 = docs.filter(pmod(col("doc_id"), lit(8L)) === 3)
         .unionByName(clones)
-      graft.streaming.ContinualSimhash.replayBatches(
-        corpus0, Seq(b1, b2), "text", "doc_id",
-        maxHamming = 8, hashFn = TextFunctions.md5Hash60, bits = 60)
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualSimhash.service(corpus0, "text", "doc_id",
+          maxHamming = 8, hashFn = TextFunctions.md5Hash60, bits = 60),
+        Seq(b1, b2))
         .orderBy(col("batch_id"), col("doc_id"))
     },
     Some("""
@@ -6699,9 +6703,10 @@ ${round("b2", "c2", 2)}
         .withColumn("doc_id", col("doc_id") + 1000000L)
       val b2 = docs.filter(pmod(col("doc_id"), lit(8L)) === 3)
         .unionByName(clones)
-      graft.streaming.ContinualWinnow.replayBatches(
-        corpus0, Seq(b1, b2), "text", "doc_id",
-        k = 3, w = 4, minShared = 3, maxDf = 50)
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualWinnow.service(corpus0, "text", "doc_id",
+          k = 3, w = 4, minShared = 3, maxDf = 50),
+        Seq(b1, b2))
         .orderBy(col("batch_id"), col("doc_id"))
     },
     Some("""
@@ -7792,7 +7797,7 @@ ${round("b2", "c2", 2)}
     """.trim))
 
   /** Continual crawl frontier
-    * ([[graft.streaming.ContinualFrontier.replayBatches]], the
+    * ([[graft.streaming.Continual.replay]] of [[graft.streaming.ContinualFrontier]], the
     * deterministic replay of the foreachBatch stream): the q370 URL
     * corpus arrives in 3 ordered batches; each batch dedups by
     * CANONICAL url against everything seen earlier (the .co.uk URLs
@@ -7806,7 +7811,7 @@ ${round("b2", "c2", 2)}
   val q412ContinualFrontier = HarnessQuery(
     "q412_continual_frontier",
     (spark, dir) => {
-      import graft.streaming.ContinualFrontier
+      import graft.streaming.{Continual, ContinualFrontier}
       val docs = Tables.documents(spark, dir)
       val srcs = docs.select(col("source")).distinct()
       def rule(host: org.apache.spark.sql.Column, prefix: String,
@@ -7825,8 +7830,8 @@ ${round("b2", "c2", 2)}
         .select(col("doc_id"), col("url"))
       val batches = (0 until 3).map(k =>
         withUrl.filter(pmod(col("doc_id"), lit(3)) === k))
-      ContinualFrontier.replayBatches(batches, "doc_id", "url",
-          rules, delayMs = 250L)
+      Continual.replay(ContinualFrontier.service("doc_id", "url",
+          rules, delayMs = 250L), batches)
         // nullable booleans render None-vs-NaN across engines: cast to
         // int like q334's is_dup (the house nullable-bool convention)
         .withColumn("allow", col("allow").cast("int"))

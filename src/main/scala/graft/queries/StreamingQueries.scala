@@ -247,7 +247,7 @@ object StreamingQueries {
     """.trim))
 
   /** Streaming heavy-hitter service replay
-    * ([[graft.streaming.ContinualCounts.replayBatches]]): events split
+    * ([[graft.streaming.Continual.replay]] of [[graft.streaming.ContinualCounts]]): events split
     * into 3 deterministic arrival batches (event_id mod 3), each
     * batch's Count-Min pane merged into the accumulated sketch by
     * cell-wise sum, the 5 hottest users probed after every merge. The
@@ -267,8 +267,9 @@ object StreamingQueries {
         .agg(count(lit(1)).as("__n"))
         .orderBy(col("__n").desc, col("user_id")).limit(5)
         .select(col("user_id"))
-      graft.streaming.ContinualCounts.replayBatches(
-        batches, "user_id", watch, d = 4, w = 64)
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualCounts.service("user_id", watch, d = 4, w = 64),
+        batches)
         .orderBy(col("batch_id"), col("user_id"))
     },
     Some("""
@@ -298,7 +299,7 @@ object StreamingQueries {
     """.trim))
 
   /** Continual preference-rating replay
-    * ([[graft.streaming.ContinualPreference.replayBatches]]): the
+    * ([[graft.streaming.Continual.replay]] of [[graft.streaming.ContinualPreference]]): the
     * q421 duel stream split into 3 arrival batches (first-event id
     * mod 3), each batch's oriented pair counts merged into the
     * accumulated table, full Bradley–Terry ratings emitted after
@@ -332,8 +333,9 @@ object StreamingQueries {
       val duelsM = graft.Materialize.cut(duels)
       val batches = (0L to 2L).map(b =>
         duelsM.filter(col("__b") === b).select(col("winner"), col("loser")))
-      graft.streaming.ContinualPreference.replayBatches(
-        batches, "winner", "loser")
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualPreference.service("winner", "loser"),
+        batches)
         .orderBy(col("batch_id"), col("item"))
     },
     Some {

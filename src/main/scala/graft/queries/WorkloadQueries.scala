@@ -2534,7 +2534,7 @@ object WorkloadQueries {
       warcCapstonePrefixSql.indexOf("\n      conv2 AS ("))
 
   /** The streaming twin of the crawl capstone
-    * ([[graft.streaming.ContinualCrawl.replayBatches]]): the q446
+    * ([[graft.streaming.Continual.replay]] of [[graft.streaming.ContinualCrawl]]): the q446
     * WARC.gz fixture split into two arriving batches — batch 1 the
     * doc_id % 20 = 0 crawl docs as their own archives; batch 2 the
     * % 20 = 10 docs (media ids + 500000, keeping ids globally
@@ -2602,9 +2602,10 @@ object WorkloadQueries {
       // differently across engines' null stringifications, and both
       // are derivable (crosses = n_seqs_spanned > 1; append_ok is
       // all-true under the fixture's increasing media ids)
-      graft.streaming.ContinualCrawl.replayBatches(
-        TextDedup.loadMinhashIndex(spark, ixPath.getAbsolutePath),
-        vocab, Seq(b1, b2))
+      graft.streaming.Continual.replay(
+        graft.streaming.ContinualCrawl.service(
+          TextDedup.loadMinhashIndex(spark, ixPath.getAbsolutePath), vocab),
+        Seq(b1.toDF(), b2.toDF()))
         .drop("crosses_boundary", "append_ok")
         .orderBy(col("batch_id"), col("media_id"))
     },

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.operators.Similarity
@@ -39,22 +38,25 @@ import graft.operators.Similarity
   */
 object ContinualAnn {
 
-  /** One folded batch: the batch's assignments (idCol, cell), the
-    * centroids to serve the NEXT batch (possibly re-centroided), and
-    * the accumulated membership (idCol, vecCol, cell). All three are
-    * materialized — a streaming micro-batch frame is only valid inside
-    * its trigger, and the two state frames must cut lineage.
+  /** Cross-batch state: the accumulated membership (idCol, vecCol,
+    * cell) and the centroids that serve the next batch — after a
+    * replay ([[Continual.replayState]]), the final centroid table to
+    * persist back with [[Similarity.saveIndex]].
     */
-  final case class FoldedBatch(
-      assigned: DataFrame, centroids: DataFrame, members: DataFrame)
+  final case class IndexState(members: DataFrame, centroids: DataFrame)
 
+  /** Fold one batch: its assignments (idCol, cell) and the next state
+    * (possibly re-centroided). All three frames are materialized — a
+    * streaming micro-batch frame is only valid inside its trigger, and
+    * the two state frames must cut lineage.
+    */
   def foldBatch(
-      members: DataFrame,
-      centroids: DataFrame,
+      state: IndexState,
       batch: DataFrame,
       idCol: String,
       vecCol: String,
-      threshold: Double): FoldedBatch = {
+      threshold: Double): (DataFrame, IndexState) = {
+    val IndexState(members, centroids) = state
     val assigned = Materialize.cut(
       Similarity.ivfAssign(batch, idCol, vecCol, centroids)
         .select(col(idCol), col("cell")))
@@ -74,122 +76,28 @@ object ContinualAnn {
     val nextCentroids = Materialize.cut(Similarity.ivfRecentroid(
       grown.select(col(idCol), col(vecCol)), idCol, vecCol,
       grown.select(col(idCol), col("cell")), centroids, flagged))
-    FoldedBatch(assigned, nextCentroids, grown)
+    (assigned, IndexState(grown, nextCentroids))
   }
 
-  /** Deterministic batch-mode replay of the stream: fold [[foldBatch]]
-    * over an ordered batch sequence starting from the loaded index
-    * state (corpus vectors + their assignments + centroids). Output:
-    * every arriving row as (idCol, batch_id, cell). The streaming
-    * entry [[start]] produces exactly these rows when fed the same
-    * batches in the same order — pinned by the StreamingSpec
-    * MemoryStream equivalence test; the q406 oracle re-derives the
-    * whole evolution in SQL.
-    */
-  def replayBatches(
-      corpusVecs: DataFrame,
-      corpusAssign: DataFrame,
-      centroids0: DataFrame,
-      batches: Seq[DataFrame],
-      idCol: String,
-      vecCol: String,
-      threshold: Double): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var members = Materialize.cut(
-      corpusAssign.select(col(idCol), col("cell"))
-        .join(corpusVecs.select(col(idCol), col(vecCol)), Seq(idCol))
-        .select(col(idCol), col(vecCol), col("cell")))
-    var centroids = Materialize.cut(
-      centroids0.select(col("cell"), col("cvec")))
-    val out = batches.zipWithIndex.map { case (b, i) =>
-      val r = foldBatch(members, centroids, b, idCol, vecCol, threshold)
-      members = r.members
-      centroids = r.centroids
-      r.assigned.select(col(idCol), lit(i.toLong).as("batch_id"),
-        col("cell"))
-    }
-    out.reduce(_.unionByName(_))
-  }
-
-  /** The final centroid table after replaying `batches` — the replay's
-    * other output, for persisting back with [[Similarity.saveIndex]]
-    * and for the spec's drift-vs-frozen assertions.
-    */
-  def replayCentroids(
-      corpusVecs: DataFrame,
-      corpusAssign: DataFrame,
-      centroids0: DataFrame,
-      batches: Seq[DataFrame],
-      idCol: String,
-      vecCol: String,
-      threshold: Double): DataFrame = {
-    var members = Materialize.cut(
-      corpusAssign.select(col(idCol), col("cell"))
-        .join(corpusVecs.select(col(idCol), col(vecCol)), Seq(idCol))
-        .select(col(idCol), col(vecCol), col("cell")))
-    var centroids = Materialize.cut(
-      centroids0.select(col("cell"), col("cvec")))
-    batches.foreach { b =>
-      val r = foldBatch(members, centroids, b, idCol, vecCol, threshold)
-      members = r.members
-      centroids = r.centroids
-    }
-    centroids
-  }
-
-  /** The streaming entry: `foreachBatch` folds each arriving
-    * micro-batch through [[foldBatch]] against the accumulated
-    * (members, centroids) state and hands the assignment frame (with
-    * its `batch_id`) to `onBatch` — typically the index's assign-table
-    * append. At-least-once guard: re-delivered batch ids are SKIPPED
-    * (appending a batch's members twice would double-weight every
-    * later re-centroid mean), keeping the state equal to the
-    * [[replayBatches]] fold.
-    */
-  def start(
-      incoming: DataFrame,
+  /** The [[Continual]] service: [[foldBatch]] from the loaded index. */
+  def service(
       corpusVecs: DataFrame,
       corpusAssign: DataFrame,
       centroids0: DataFrame,
       idCol: String,
       vecCol: String,
-      threshold: Double,
-      queryName: String = "continual_ann_index")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(corpusVecs, corpusAssign, centroids0,
-        idCol, vecCol, threshold)(onBatch))
-      .start()
-
-  /** The stateful `foreachBatch` step [[start]] installs — exposed at
-    * package scope so the at-least-once guard is directly testable
-    * (the spec re-delivers a batch id and asserts no double fold).
-    */
-  private[graft] def batchStep(
-      corpusVecs: DataFrame,
-      corpusAssign: DataFrame,
-      centroids0: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var members = Materialize.cut(
-      corpusAssign.select(col(idCol), col("cell"))
-        .join(corpusVecs.select(col(idCol), col(vecCol)), Seq(idCol))
-        .select(col(idCol), col(vecCol), col("cell")))
-    var centroids = Materialize.cut(
-      centroids0.select(col("cell"), col("cvec")))
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val r = foldBatch(members, centroids, batch, idCol, vecCol,
+      threshold: Double): ContinualService[IndexState] =
+    ContinualService(
+      _ => IndexState(
+        Materialize.cut(
+          corpusAssign.select(col(idCol), col("cell"))
+            .join(corpusVecs.select(col(idCol), col(vecCol)), Seq(idCol))
+            .select(col(idCol), col(vecCol), col("cell"))),
+        Materialize.cut(centroids0.select(col("cell"), col("cvec")))),
+      (state, batch, batchId) => {
+        val (assigned, next) = foldBatch(state, batch, idCol, vecCol,
           threshold)
-        members = r.members
-        centroids = r.centroids
-        lastMerged = batchId
-        onBatch(r.assigned.select(col(idCol),
-          lit(batchId).as("batch_id"), col("cell")))
-      }
-  }
+        (assigned.select(col(idCol), lit(batchId).as("batch_id"),
+          col("cell")), next)
+      })
 }

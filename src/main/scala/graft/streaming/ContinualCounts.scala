@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.operators.Sketches
@@ -27,17 +26,15 @@ import graft.operators.Sketches
 object ContinualCounts {
 
   /** One stepped batch: the watchlist estimates after this batch's
-    * merge, plus the merged sketch to carry forward.
+    * merge, and the merged sketch to carry forward.
     */
-  final case class SteppedSketch(estimates: DataFrame, sketch: DataFrame)
-
   def mergeAndProbe(
       sketch: DataFrame,
       batch: DataFrame,
       itemCol: String,
       watch: DataFrame,
       d: Int,
-      w: Int): SteppedSketch = {
+      w: Int): (DataFrame, DataFrame) = {
     val pane = Sketches.countMinBuild(batch, itemCol, d, w)
     val merged = Materialize.cut(
       sketch.unionByName(pane)
@@ -45,83 +42,20 @@ object ContinualCounts {
         .agg(sum(col("c")).as("c")))
     val est = Materialize.cut(
       Sketches.countMinEstimate(merged, watch, itemCol, d, w))
-    SteppedSketch(est, merged)
+    (est, merged)
   }
 
-  /** Deterministic batch-mode replay: fold [[mergeAndProbe]] over an
-    * ordered batch sequence from an empty sketch. Output: one row per
-    * (batch_id, watch item) with the estimate AFTER that batch. The
-    * streaming entry [[start]] produces exactly these rows for the
-    * same batch split — pinned by the StreamingSpec equivalence test.
-    */
-  def replayBatches(
-      batches: Seq[DataFrame],
+  /** The [[Continual]] service: [[mergeAndProbe]] from an empty sketch. */
+  def service(
       itemCol: String,
       watch: DataFrame,
       d: Int,
-      w: Int): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var sketch = emptySketch(batches.head.sparkSession)
-    val steps = batches.zipWithIndex.map { case (b, i) =>
-      val r = mergeAndProbe(sketch, b, itemCol, watch, d, w)
-      sketch = r.sketch
-      r.estimates.select(lit(i.toLong).as("batch_id"),
-        col(itemCol), col("cms_est"))
-    }
-    steps.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` merges each micro-batch's
-    * pane into the accumulated sketch and hands the watchlist
-    * estimates (with their `batch_id`) to `onBatch`.
-    *
-    * At-least-once guard: `foreachBatch` may re-deliver a batch id
-    * after a transient failure, and the cell-wise-sum merge is NOT
-    * idempotent — merging the same pane twice double-counts. The
-    * closure therefore tracks the last merged batch id and SKIPS any
-    * id it has already merged (the sink received that batch's
-    * estimates on the first delivery), keeping the accumulated state
-    * equal to the [[replayBatches]] fold. The state itself lives in
-    * this process — restart-survivable state would move the sketch
-    * into `flatMapGroupsWithState` under a checkpointLocation; this
-    * entry is the single-process serving shape.
-    */
-  def start(
-      incoming: DataFrame,
-      itemCol: String,
-      watch: DataFrame,
-      d: Int,
-      w: Int,
-      queryName: String = "continual_counts")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(incoming.sparkSession, itemCol, watch,
-        d, w)(onBatch))
-      .start()
-
-  /** The stateful `foreachBatch` step [[start]] installs — exposed at
-    * package scope so the at-least-once guard is directly testable
-    * (the spec re-delivers a batch id and asserts no double merge).
-    */
-  private[graft] def batchStep(
-      spark: org.apache.spark.sql.SparkSession,
-      itemCol: String,
-      watch: DataFrame,
-      d: Int,
-      w: Int)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var sketch = emptySketch(spark)
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val r = mergeAndProbe(sketch, batch, itemCol, watch, d, w)
-        sketch = r.sketch
-        lastMerged = batchId
-        onBatch(r.estimates.select(lit(batchId).as("batch_id"),
-          col(itemCol), col("cms_est")))
-      }
-  }
+      w: Int): ContinualService[DataFrame] =
+    ContinualService(emptySketch, (sketch, batch, batchId) => {
+      val (est, merged) = mergeAndProbe(sketch, batch, itemCol, watch, d, w)
+      (est.select(lit(batchId).as("batch_id"), col(itemCol),
+        col("cms_est")), merged)
+    })
 
   private def emptySketch(
       spark: org.apache.spark.sql.SparkSession): DataFrame = {

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
 
@@ -32,58 +31,14 @@ import graft.operators.TextAnalysis
   */
 object ContinualCoverage {
 
-  private def withBatchId(cov: DataFrame, batchId: Long): DataFrame =
-    cov.select(lit(batchId).as("batch_id"), col("group_key"),
-      col("n_words"), col("n_unk"), col("oov_rate"), col("mean_pieces"))
-
-  /** Deterministic batch-mode replay of the stream: coverage of each
-    * batch in order under the frozen vocab. Output: one row per
-    * (batch_id, group_key). The streaming entry [[start]] produces
-    * exactly these rows for the same batch split — pinned by the
-    * StreamingSpec MemoryStream equivalence test.
-    */
-  def replayBatches(
-      vocab: DataFrame,
-      batches: Seq[DataFrame],
-      textCol: String,
-      groupCol: String): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    batches.zipWithIndex.map { case (b, i) =>
-      withBatchId(
-        TextAnalysis.wordpieceCoverage(b, textCol, groupCol, vocab),
-        i.toLong)
-    }.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` measures each arriving
-    * micro-batch's coverage under the frozen vocab and hands the
-    * per-group frame (with `batch_id`) to `onBatch`. Re-delivered
-    * batch ids are skipped (at-least-once guard).
-    */
-  def start(
-      incoming: DataFrame,
+  /** The [[Continual]] service: stateless, one coverage frame per batch. */
+  def service(
       vocab: DataFrame,
       textCol: String,
-      groupCol: String,
-      queryName: String = "continual_tokenizer_coverage")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(vocab, textCol, groupCol)(onBatch))
-      .start()
-
-  private[graft] def batchStep(
-      vocab: DataFrame,
-      textCol: String,
-      groupCol: String)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var lastSeen = -1L
-    (batch, batchId) =>
-      if (batchId > lastSeen) {
-        lastSeen = batchId
-        onBatch(withBatchId(
-          TextAnalysis.wordpieceCoverage(batch, textCol, groupCol, vocab),
-          batchId))
-      }
-  }
+      groupCol: String): ContinualService[Unit] =
+    ContinualService(_ => (), (_, batch, batchId) =>
+      (TextAnalysis.wordpieceCoverage(batch, textCol, groupCol, vocab)
+        .select(lit(batchId).as("batch_id"), col("group_key"),
+          col("n_words"), col("n_unk"), col("oov_rate"),
+          col("mean_pieces")), ()))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.operators.{Multimodal, TextAnalysis}
@@ -42,9 +41,7 @@ import graft.pipeline.WarcPipeline.WarcPipelineConfig
   * corpus or a STRICTLY EARLIER batch's survivor matches); media ids
   * must be globally increasing across batches for the packing
   * manifest's `append_ok` to hold ([[ContinualPacking]]); ids must be
-  * disjoint from the index's. At-least-once guard: neither the index
-  * growth nor the offset advance is idempotent, so re-delivered batch
-  * ids are skipped.
+  * disjoint from the index's.
   */
 object ContinualCrawl {
 
@@ -53,6 +50,10 @@ object ContinualCrawl {
     */
   final case class CrawlState(index: MinhashIndex, pack: DataFrame)
 
+  private val packCols = Seq("n_tokens", "start_offset", "first_seq",
+    "last_seq", "offset_in_seq", "n_seqs_spanned", "crosses_boundary",
+    "append_ok")
+
   /** One stepped batch: one manifest row per GATED document —
     * (media_id, is_dup, matched_id, and for survivors the
     * [[TextAnalysis.sequencePackAppend]] placement columns: n_tokens,
@@ -60,105 +61,49 @@ object ContinualCrawl {
     * n_seqs_spanned, crosses_boundary, append_ok; null for dups) —
     * plus the state to carry forward.
     */
-  final case class SteppedCrawl(manifest: DataFrame, state: CrawlState)
-
-  private val packCols = Seq("n_tokens", "start_offset", "first_seq",
-    "last_seq", "offset_in_seq", "n_seqs_spanned", "crosses_boundary",
-    "append_ok")
-
   def step(
       state: CrawlState,
       media: Dataset[Multimodal.MediaRow],
       vocab: DataFrame,
-      cfg: WarcPipelineConfig = WarcPipelineConfig()): SteppedCrawl = {
+      cfg: WarcPipelineConfig = WarcPipelineConfig()): (DataFrame, CrawlState) = {
     val (_, gated) = WarcPipeline.extractAndGate(media, cfg,
       cutExtracted = false)
-    val r = ContinualMinhash.checkAndAppend(
+    val (checked, index) = ContinualMinhash.checkAndAppend(
       state.index, gated, "text", "media_id", cfg.n, cfg.numHashes,
       cfg.bands, cfg.nearDupThreshold, cfg.hashFn)
     val survivors = gated.join(
-      r.checked.filter(!col("is_dup")).select(col("media_id")),
+      checked.filter(!col("is_dup")).select(col("media_id")),
       Seq("media_id"))
     val counts = TextAnalysis.wordpieceTokenCounts(
       survivors, "text", "media_id", vocab)
-    val p = ContinualPacking.step(
+    val (packed, pack) = ContinualPacking.step(
       state.pack, counts, "media_id", "n_tokens", cfg.targetTokens)
-    // no cut: both join sides are already materialized (r.checked by
-    // ContinualMinhash, p.manifest by ContinualPacking), the join is
+    // no cut: both join sides are already materialized (checked by
+    // ContinualMinhash, packed by ContinualPacking), the join is
     // verdict-row-sized and has a single consumer — re-materializing
     // it was one more barrier job per trigger for nothing (round 14)
     val manifest =
-      r.checked.select(col("media_id"), col("is_dup"), col("matched_id"))
-        .join(p.manifest.select(col("media_id") +: packCols.map(col): _*),
+      checked.select(col("media_id"), col("is_dup"), col("matched_id"))
+        .join(packed.select(col("media_id") +: packCols.map(col): _*),
           Seq("media_id"), "left")
-    SteppedCrawl(manifest, CrawlState(r.index, p.state))
+    (manifest, CrawlState(index, pack))
   }
 
-  /** Deterministic batch-mode replay of the stream: fold [[step]]
-    * over an ordered batch sequence from the initial corpus index and
-    * empty packing state. Output: every gated document as (batch_id,
-    * media_id, is_dup, matched_id, pack placement columns). The
-    * streaming entry [[start]] produces exactly these rows for the
-    * same batch split — pinned by the StreamingSpec MemoryStream
-    * equivalence test.
-    */
-  def replayBatches(
+  /** The [[Continual]] service: [[step]] over MediaRow-shaped batches. */
+  def service(
       index0: MinhashIndex,
       vocab: DataFrame,
-      batches: Seq[Dataset[Multimodal.MediaRow]],
-      cfg: WarcPipelineConfig = WarcPipelineConfig()): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var state = CrawlState(
-      MinhashIndex(Materialize.cut(index0.bands),
-        Materialize.cut(index0.shingles)),
-      ContinualPacking.emptyState(
-        batches.head.sparkSession, "media_id"))
-    val steps = batches.zipWithIndex.map { case (b, i) =>
-      val r = step(state, b, vocab, cfg)
-      state = r.state
-      r.manifest.select(lit(i.toLong).as("batch_id"), col("*"))
-    }
-    steps.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` routes each arriving
-    * micro-batch of [[Multimodal.MediaRow]]-shaped rows through
-    * [[step]] and hands the manifest (with `batch_id`) to `onBatch`.
-    * Re-delivered batch ids are skipped (at-least-once guard — index
-    * growth and offset advance are both non-idempotent).
-    */
-  def start(
-      incoming: DataFrame,
-      index0: MinhashIndex,
-      vocab: DataFrame,
-      cfg: WarcPipelineConfig = WarcPipelineConfig(),
-      queryName: String = "continual_crawl")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(index0, vocab, cfg)(onBatch))
-      .start()
-
-  private[graft] def batchStep(
-      index0: MinhashIndex,
-      vocab: DataFrame,
-      cfg: WarcPipelineConfig)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var state: CrawlState = null
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        if (state == null)
-          state = CrawlState(
-            MinhashIndex(Materialize.cut(index0.bands),
-              Materialize.cut(index0.shingles)),
-            ContinualPacking.emptyState(batch.sparkSession, "media_id"))
+      cfg: WarcPipelineConfig = WarcPipelineConfig())
+      : ContinualService[CrawlState] =
+    ContinualService(
+      spark => CrawlState(
+        MinhashIndex(Materialize.cut(index0.bands),
+          Materialize.cut(index0.shingles)),
+        ContinualPacking.emptyState(spark, "media_id")),
+      (state, batch, batchId) => {
         import batch.sparkSession.implicits._
-        val r = step(state, batch.as[Multimodal.MediaRow], vocab, cfg)
-        state = r.state
-        lastMerged = batchId
-        onBatch(r.manifest.select(lit(batchId).as("batch_id"),
-          col("*")))
-      }
-  }
+        val (manifest, next) =
+          step(state, batch.as[Multimodal.MediaRow], vocab, cfg)
+        (manifest.select(lit(batchId).as("batch_id"), col("*")), next)
+      })
 }

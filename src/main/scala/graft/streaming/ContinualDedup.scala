@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.operators.Similarity
@@ -30,8 +29,8 @@ import graft.operators.Similarity
   * Within-batch duplicates are deliberately not collapsed — the
   * documented [[Similarity.semanticDedupAgainst]] contract — so the
   * whole flow replays deterministically given the batch split, which is
-  * what [[replayBatches]] does and what the q334 oracle re-derives in
-  * SQL.
+  * what [[Continual.replay]] does and what the q334 oracle re-derives
+  * in SQL.
   */
 object ContinualDedup {
 
@@ -42,12 +41,10 @@ object ContinualDedup {
     * cell). Verdicts are materialized because a streaming micro-batch
     * frame is only valid inside its trigger; the state appends a
     * materialized batch-sized delta.
-    */
-  final case class CheckedBatch(checked: DataFrame, corpus: DataFrame)
-
-  /** `corpus` must be the ASSIGNED state ([[Similarity.assignedForDedup]]
-    * over the accumulated survivors — [[replayBatches]]/[[batchStep]]
-    * seed it from corpus0 once). Round 14: carrying (cell, __norm) in
+    *
+    * `corpus` must be the ASSIGNED state ([[Similarity.assignedForDedup]]
+    * over the accumulated survivors — [[service]] seeds it from corpus0
+    * once). Round 14: carrying (cell, __norm) in
     * the state means a trigger assigns only its BATCH; the old flow
     * re-ran the nearest-centroid kernel + per-row window + a
     * materialization over the ENTIRE corpus every trigger — O(corpus)
@@ -62,7 +59,7 @@ object ContinualDedup {
       vecCol: String,
       centroids: DataFrame,
       threshold: Double,
-      dim: Int = 64): CheckedBatch = {
+      dim: Int = 64): (DataFrame, DataFrame) = {
     val batchAssigned = Similarity.assignedForDedup(
       batch, idCol, vecCol, centroids)
     val checked = Materialize.cut(
@@ -81,91 +78,24 @@ object ContinualDedup {
       batchAssigned
         .join(checked.filter(!col("is_dup")).select(col(idCol)), Seq(idCol))
         .coalesce(1))
-    CheckedBatch(checked, corpus.unionByName(delta))
+    (checked, corpus.unionByName(delta))
   }
 
-  /** Deterministic batch-mode replay of the stream: fold
-    * [[checkAndAppend]] over an ordered batch sequence. Output: every
-    * incoming row as (idCol, batch_id, cell, is_dup, matched_id).
-    * The streaming entry [[start]] produces exactly these rows when fed
-    * the same batches in the same order — pinned by the StreamingSpec
-    * MemoryStream equivalence test.
-    */
-  def replayBatches(
-      corpus0: DataFrame,
-      batches: Seq[DataFrame],
-      idCol: String,
-      vecCol: String,
-      centroids: DataFrame,
-      threshold: Double,
-      dim: Int = 64): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var corpus = Materialize.cut(
-      Similarity.assignedForDedup(corpus0, idCol, vecCol, centroids))
-    val checked = batches.zipWithIndex.map { case (b, i) =>
-      val r = checkAndAppend(corpus, b, idCol, vecCol, centroids,
-        threshold, dim)
-      corpus = r.corpus
-      r.checked.select(col(idCol), lit(i.toLong).as("batch_id"),
-        col("cell"), col("is_dup"), col("matched_id"))
-    }
-    checked.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` routes each arriving
-    * micro-batch through [[checkAndAppend]] against the accumulated
-    * corpus and hands the verdict frame (with its `batch_id`) to
-    * `onBatch` — typically an append sink. State crosses triggers in
-    * the materialized `corpus` var, exactly the [[replayBatches]] fold.
-    *
-    * At-least-once guard: `foreachBatch` may re-deliver a batch id
-    * after a transient failure, and appending a batch's survivors to
-    * the corpus twice is NOT idempotent (the second delivery would
-    * self-match against the first). The closure tracks the last
-    * appended batch id and SKIPS re-delivered ids, keeping the corpus
-    * equal to the [[replayBatches]] fold; restart-survivable state
-    * would move the corpus into a checkpointed state store — this
-    * entry is the single-process serving shape.
-    */
-  def start(
-      incoming: DataFrame,
+  /** The [[Continual]] service: [[checkAndAppend]] from corpus0. */
+  def service(
       corpus0: DataFrame,
       idCol: String,
       vecCol: String,
       centroids: DataFrame,
       threshold: Double,
-      dim: Int = 64,
-      queryName: String = "continual_semantic_dedup")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(corpus0, idCol, vecCol, centroids,
-        threshold, dim)(onBatch))
-      .start()
-
-  /** The stateful `foreachBatch` step [[start]] installs — exposed at
-    * package scope so the at-least-once guard is directly testable
-    * (the spec re-delivers a batch id and asserts no double append).
-    */
-  private[graft] def batchStep(
-      corpus0: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: DataFrame,
-      threshold: Double,
-      dim: Int)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var corpus = Materialize.cut(
-      Similarity.assignedForDedup(corpus0, idCol, vecCol, centroids))
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val r = checkAndAppend(corpus, batch, idCol, vecCol, centroids,
-          threshold, dim)
-        corpus = r.corpus
-        lastMerged = batchId
-        onBatch(r.checked.select(col(idCol), lit(batchId).as("batch_id"),
-          col("cell"), col("is_dup"), col("matched_id")))
-      }
-  }
+      dim: Int = 64): ContinualService[DataFrame] =
+    ContinualService(
+      _ => Materialize.cut(
+        Similarity.assignedForDedup(corpus0, idCol, vecCol, centroids)),
+      (corpus, batch, batchId) => {
+        val (checked, next) = checkAndAppend(corpus, batch, idCol, vecCol,
+          centroids, threshold, dim)
+        (checked.select(col(idCol), lit(batchId).as("batch_id"),
+          col("cell"), col("is_dup"), col("matched_id")), next)
+      })
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.functions.UrlFunctions
@@ -38,18 +37,20 @@ import graft.operators.Crawl
   */
 object ContinualFrontier {
 
-  final case class FrontierBatch(
-      verdicts: DataFrame, seen: DataFrame, hostCounts: DataFrame)
+  /** Cross-batch state: the seen canonical URLs and the per-host
+    * counters of scheduled URLs.
+    */
+  final case class FrontierState(seen: DataFrame, hostCounts: DataFrame)
 
   def foldBatch(
-      seen: DataFrame,
-      hostCounts: DataFrame,
+      state: FrontierState,
       batch: DataFrame,
       idCol: String,
       urlCol: String,
       rules: DataFrame,
-      delayMs: Long): FrontierBatch = {
+      delayMs: Long): (DataFrame, FrontierState) = {
     require(delayMs >= 0, s"delayMs must be >= 0, got $delayMs")
+    val FrontierState(seen, hostCounts) = state
     // scheme-less URLs canonicalize to NULL (the q370 contract);
     // fall back to the raw string so they dedup as themselves instead
     // of all colliding on the null key
@@ -95,92 +96,25 @@ object ContinualFrontier {
         .unionByName(verdicts.filter(col("host_rank").isNotNull)
           .groupBy(col("host")).agg(count(lit(1)).as("__n")))
         .groupBy(col("host")).agg(sum(col("__n")).as("__n")))
-    FrontierBatch(verdicts, newSeen, newCounts)
+    (verdicts, FrontierState(newSeen, newCounts))
   }
 
-  /** Deterministic batch-mode replay: fold [[foldBatch]] over an
-    * ordered batch sequence from an empty history. Output: every
-    * incoming row as (idCol, urlCol, batch_id, is_dup_url, host,
-    * allow, host_rank, fetch_offset_ms) — host/allow are null for
-    * dropped duplicates, host_rank/fetch_offset_ms null for
-    * robots-denied rows. The streaming entry [[start]] emits exactly
-    * these rows for the same batches in order.
-    */
-  def replayBatches(
-      batches: Seq[DataFrame],
+  /** The [[Continual]] service: [[foldBatch]] from an empty history. */
+  def service(
       idCol: String,
       urlCol: String,
       rules: DataFrame,
-      delayMs: Long): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    val spark = rules.sparkSession
-    var seen = emptySeen(spark)
-    var counts = emptyCounts(spark)
-    val out = batches.zipWithIndex.map { case (b, i) =>
-      val r = foldBatch(seen, counts, b, idCol, urlCol, rules, delayMs)
-      seen = r.seen
-      counts = r.hostCounts
-      r.verdicts.withColumn("batch_id", lit(i.toLong))
-        .select(col(idCol), col(urlCol), col("batch_id"),
+      delayMs: Long): ContinualService[FrontierState] =
+    ContinualService(
+      spark => FrontierState(
+        spark.range(0).select(lit("").as("__canon")).filter(lit(false)),
+        spark.range(0).select(lit("").as("host"), lit(0L).as("__n"))
+          .filter(lit(false))),
+      (state, batch, batchId) => {
+        val (verdicts, next) = foldBatch(state, batch, idCol, urlCol,
+          rules, delayMs)
+        (verdicts.select(col(idCol), col(urlCol), lit(batchId).as("batch_id"),
           col("is_dup_url"), col("host"), col("allow"),
-          col("host_rank"), col("fetch_offset_ms"))
-    }
-    out.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` folds each arriving URL
-    * micro-batch against the accumulated (seen, host-counter) state
-    * and hands the verdict frame (with its `batch_id`) to `onBatch`.
-    * At-least-once guard: re-delivered batch ids are SKIPPED — a
-    * double fold would mark the whole batch duplicate and advance no
-    * ranks, but the verdicts would be emitted twice.
-    */
-  def start(
-      incoming: DataFrame,
-      idCol: String,
-      urlCol: String,
-      rules: DataFrame,
-      delayMs: Long,
-      queryName: String = "continual_frontier")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(idCol, urlCol, rules, delayMs)(onBatch))
-      .start()
-
-  /** The stateful `foreachBatch` step [[start]] installs — exposed at
-    * package scope for the re-delivery guard spec.
-    */
-  private[graft] def batchStep(
-      idCol: String,
-      urlCol: String,
-      rules: DataFrame,
-      delayMs: Long)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    val spark = rules.sparkSession
-    var seen = emptySeen(spark)
-    var counts = emptyCounts(spark)
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val r = foldBatch(seen, counts, batch, idCol, urlCol, rules,
-          delayMs)
-        seen = r.seen
-        counts = r.hostCounts
-        lastMerged = batchId
-        onBatch(r.verdicts.withColumn("batch_id", lit(batchId))
-          .select(col(idCol), col(urlCol), col("batch_id"),
-            col("is_dup_url"), col("host"), col("allow"),
-            col("host_rank"), col("fetch_offset_ms")))
-      }
-  }
-
-  private def emptySeen(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(0).select(lit("").as("__canon")).filter(lit(false))
-
-  private def emptyCounts(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(0).select(lit("").as("host"), lit(0L).as("__n"))
-      .filter(lit(false))
+          col("host_rank"), col("fetch_offset_ms")), next)
+      })
 }

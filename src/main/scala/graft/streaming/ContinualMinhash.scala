@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.functions.TextFunctions
@@ -33,18 +32,16 @@ import graft.operators.TextDedup.MinhashIndex
   * EARLIER batch matches it (jaccard >= threshold). Within-batch
   * duplicates are deliberately not collapsed — the
   * [[ContinualDedup]] contract — so the flow replays
-  * deterministically given the batch split ([[replayBatches]], which
-  * the q441 oracle re-derives in SQL).
+  * deterministically given the batch split ([[Continual.replay]],
+  * which the q441 oracle re-derives in SQL).
   */
 object ContinualMinhash {
 
   /** One checked batch: incoming rows with verdicts
     * (idCol, is_dup, matched_id — the smallest matching corpus id,
     * null when new), plus the grown index to carry forward.
-    */
-  final case class CheckedBatch(checked: DataFrame, index: MinhashIndex)
-
-  /** Sign-once discipline (round 14): the batch is tokenized and
+    *
+    * Sign-once discipline (round 14): the batch is tokenized and
     * shingled EXACTLY ONCE — into the materialized shingle delta —
     * and everything else derives from it: the band delta is one hash
     * aggregate over those rows, the probe reads both materialized
@@ -66,7 +63,8 @@ object ContinualMinhash {
       numHashes: Int = 16,
       bands: Int = 8,
       threshold: Double = 0.8,
-      hashFn: Column => Column = TextFunctions.md5Hash60): CheckedBatch = {
+      hashFn: Column => Column = TextFunctions.md5Hash60)
+      : (DataFrame, MinhashIndex) = {
     val batchShingles = Materialize.cut(
       TextDedup.shingleTable(batch, textCol, idCol, n)
         .select(col(idCol).as("id"), col("__s").as("shingle"))
@@ -90,61 +88,15 @@ object ContinualMinhash {
     // — lineage depth is constant (every input is checkpointed), and
     // a later probe's scan of the leg costs the same id-broadcast
     // filter whether or not it was re-materialized first.
-    CheckedBatch(checked, MinhashIndex(
+    (checked, MinhashIndex(
       index.bands.unionByName(
         batchBands.join(survIds, Seq("id"), "leftsemi")),
       index.shingles.unionByName(
         batchShingles.join(survIds, Seq("id"), "leftsemi"))))
   }
 
-  /** Deterministic batch-mode replay of the stream: fold
-    * [[checkAndAppend]] over an ordered batch sequence from the
-    * initial corpus' index. Output: every incoming row as
-    * (idCol, batch_id, is_dup, matched_id). The streaming entry
-    * [[start]] produces exactly these rows for the same batch split —
-    * pinned by the StreamingSpec MemoryStream equivalence test.
-    */
-  def replayBatches(
-      corpus0: DataFrame,
-      batches: Seq[DataFrame],
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 8,
-      threshold: Double = 0.8,
-      hashFn: Column => Column = TextFunctions.md5Hash60): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    // seed with the same sign-once split as [[checkAndAppend]]: the
-    // corpus is shingled once, the band table derives from the
-    // materialized shingle rows
-    val sh0 = Materialize.cut(
-      TextDedup.shingleTable(corpus0, textCol, idCol, n)
-        .select(col(idCol).as("id"), col("__s").as("shingle")))
-    var ix = MinhashIndex(
-      Materialize.cut(TextDedup.minhashBandsFromShingles(
-        sh0, numHashes, bands, hashFn)),
-      sh0)
-    val checked = batches.zipWithIndex.map { case (b, i) =>
-      val r = checkAndAppend(ix, b, textCol, idCol, n, numHashes,
-        bands, threshold, hashFn)
-      ix = r.index
-      r.checked.select(col(idCol), lit(i.toLong).as("batch_id"),
-        col("is_dup"), col("matched_id"))
-    }
-    checked.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` routes each arriving
-    * micro-batch through [[checkAndAppend]] against the accumulated
-    * index and hands the verdict frame (with `batch_id`) to
-    * `onBatch`. At-least-once guard: growing the index twice for one
-    * batch id is NOT idempotent (the second delivery would self-match
-    * against the first), so re-delivered ids are skipped — the
-    * [[ContinualDedup]] discipline.
-    */
-  def start(
-      incoming: DataFrame,
+  /** The [[Continual]] service: [[checkAndAppend]] from corpus0's index. */
+  def service(
       corpus0: DataFrame,
       textCol: String,
       idCol: String,
@@ -152,44 +104,25 @@ object ContinualMinhash {
       numHashes: Int = 16,
       bands: Int = 8,
       threshold: Double = 0.8,
-      hashFn: Column => Column = TextFunctions.md5Hash60,
-      queryName: String = "continual_minhash_dedup")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(corpus0, textCol, idCol, n, numHashes,
-        bands, threshold, hashFn)(onBatch))
-      .start()
-
-  private[graft] def batchStep(
-      corpus0: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double,
-      hashFn: Column => Column)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var ix: MinhashIndex = null
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        if (ix == null) {
-          val sh0 = Materialize.cut(
-            TextDedup.shingleTable(corpus0, textCol, idCol, n)
-              .select(col(idCol).as("id"), col("__s").as("shingle")))
-          ix = MinhashIndex(
-            Materialize.cut(TextDedup.minhashBandsFromShingles(
-              sh0, numHashes, bands, hashFn)),
-            sh0)
-        }
-        val r = checkAndAppend(ix, batch, textCol, idCol, n, numHashes,
-          bands, threshold, hashFn)
-        ix = r.index
-        lastMerged = batchId
-        onBatch(r.checked.select(lit(batchId).as("batch_id"),
-          col(idCol), col("is_dup"), col("matched_id")))
-      }
-  }
+      hashFn: Column => Column = TextFunctions.md5Hash60)
+      : ContinualService[MinhashIndex] =
+    ContinualService(
+      _ => {
+        // seed with the same sign-once split as [[checkAndAppend]]: the
+        // corpus is shingled once, the band table derives from the
+        // materialized shingle rows
+        val sh0 = Materialize.cut(
+          TextDedup.shingleTable(corpus0, textCol, idCol, n)
+            .select(col(idCol).as("id"), col("__s").as("shingle")))
+        MinhashIndex(
+          Materialize.cut(TextDedup.minhashBandsFromShingles(
+            sh0, numHashes, bands, hashFn)),
+          sh0)
+      },
+      (ix, batch, batchId) => {
+        val (checked, next) = checkAndAppend(ix, batch, textCol, idCol, n,
+          numHashes, bands, threshold, hashFn)
+        (checked.select(col(idCol), lit(batchId).as("batch_id"),
+          col("is_dup"), col("matched_id")), next)
+      })
 }

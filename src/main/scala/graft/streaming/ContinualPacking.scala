@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.operators.TextAnalysis
@@ -25,11 +24,6 @@ import graft.operators.TextAnalysis
   */
 object ContinualPacking {
 
-  /** One stepped batch: the batch's manifest rows, plus the 1-row
-    * compressed state to carry forward.
-    */
-  final case class SteppedPack(manifest: DataFrame, state: DataFrame)
-
   /** Empty compressed state: zero documents, zero tokens. */
   def emptyState(
       spark: org.apache.spark.sql.SparkSession, idCol: String): DataFrame = {
@@ -37,76 +31,28 @@ object ContinualPacking {
     Seq.empty[(Long, Long)].toDF(idCol, "n_tokens")
   }
 
-  /** Pack one batch against the running state. The state a batch
-    * leaves behind is again one (max id, total tokens) row.
+  /** Pack one batch against the running state: the batch's manifest
+    * rows, and the state it leaves behind — again one (max id, total
+    * tokens) row.
     */
   def step(
       state: DataFrame, batch: DataFrame, idCol: String,
-      tokenCountCol: String, seqLen: Int): SteppedPack = {
+      tokenCountCol: String, seqLen: Int): (DataFrame, DataFrame) = {
     val manifest = Materialize.cut(TextAnalysis.sequencePackAppend(
       state, batch, idCol, tokenCountCol, seqLen))
     val newState = Materialize.cut(
       state.select(col(idCol), col("n_tokens"))
         .unionByName(manifest.select(col(idCol), col("n_tokens")))
         .agg(max(col(idCol)).as(idCol), sum(col("n_tokens")).as("n_tokens")))
-    SteppedPack(manifest, newState)
+    (manifest, newState)
   }
 
-  /** Deterministic batch-mode replay: fold [[step]] over an ordered
-    * batch sequence from the empty state. Output: every batch's
-    * manifest rows tagged with `batch_id`. The streaming entry
-    * [[start]] produces exactly these rows for the same batch split —
-    * pinned by the StreamingSpec equivalence test.
-    */
-  def replayBatches(
-      batches: Seq[DataFrame], idCol: String, tokenCountCol: String,
-      seqLen: Int): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var state = emptyState(batches.head.sparkSession, idCol)
-    val steps = batches.zipWithIndex.map { case (b, i) =>
-      val r = step(state, b, idCol, tokenCountCol, seqLen)
-      state = r.state
-      r.manifest.select(lit(i.toLong).as("batch_id"), col("*"))
-    }
-    steps.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` packs each micro-batch
-    * against the running offsets and hands its manifest rows (with
-    * `batch_id`) to `onBatch`.
-    *
-    * At-least-once guard: a re-delivered batch id must NOT advance the
-    * offsets twice (packing is not idempotent), so the closure tracks
-    * the last packed id and skips re-deliveries — the same discipline
-    * as [[ContinualCounts.start]]. State lives in this process; a
-    * restart-survivable variant would persist the one state row under
-    * a checkpointLocation.
-    */
-  def start(
-      incoming: DataFrame, idCol: String, tokenCountCol: String,
-      seqLen: Int, queryName: String = "continual_packing")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(incoming.sparkSession, idCol, tokenCountCol,
-        seqLen)(onBatch))
-      .start()
-
-  /** The stateful `foreachBatch` step [[start]] installs — exposed at
-    * package scope so the at-least-once guard is directly testable.
-    */
-  private[graft] def batchStep(
-      spark: org.apache.spark.sql.SparkSession, idCol: String,
-      tokenCountCol: String, seqLen: Int)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var state = emptyState(spark, idCol)
-    var lastPacked = -1L
-    (batch, batchId) =>
-      if (batchId > lastPacked) {
-        val r = step(state, batch, idCol, tokenCountCol, seqLen)
-        state = r.state
-        lastPacked = batchId
-        onBatch(r.manifest.select(lit(batchId).as("batch_id"), col("*")))
-      }
-  }
+  /** The [[Continual]] service: [[step]] from the empty state. */
+  def service(
+      idCol: String, tokenCountCol: String,
+      seqLen: Int): ContinualService[DataFrame] =
+    ContinualService(emptyState(_, idCol), (state, batch, batchId) => {
+      val (manifest, next) = step(state, batch, idCol, tokenCountCol, seqLen)
+      (manifest.select(lit(batchId).as("batch_id"), col("*")), next)
+    })
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.operators.Preference
@@ -30,18 +29,16 @@ import graft.operators.Preference
   */
 object ContinualPreference {
 
-  final case class SteppedRatings(ratings: DataFrame, pairs: DataFrame)
-
   /** One stepped batch: merge the batch's oriented duel counts into
-    * the accumulated pair table, re-rate, carry the merged table
-    * forward.
+    * the accumulated pair table, re-rate; returns the ratings and the
+    * merged table to carry forward.
     */
   def mergeAndRate(
       pairs: DataFrame,
       batch: DataFrame,
       winnerCol: String,
       loserCol: String,
-      rounds: Int = 5): SteppedRatings = {
+      rounds: Int = 5): (DataFrame, DataFrame) = {
     val batchPairs = batch
       .select(col(winnerCol).as("a"), col(loserCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
@@ -52,70 +49,24 @@ object ContinualPreference {
         .groupBy(col("a"), col("b")).agg(sum(col("n")).as("n")))
     val ratings = Materialize.cut(
       Preference.bradleyTerryFromPairs(merged, rounds))
-    SteppedRatings(ratings, merged)
+    (ratings, merged)
   }
 
-  /** Deterministic batch-mode replay: fold [[mergeAndRate]] over an
-    * ordered batch sequence from an empty pair table. Output: one row
-    * per (batch_id, item) with the ratings AFTER that batch. The
-    * streaming entry [[start]] produces exactly these rows for the
-    * same batch split — pinned by the spec equivalence test.
+  /** The [[Continual]] service: [[mergeAndRate]]. The pair table is
+    * `None` until the first batch, whose columns type it ([[emptyPairsLike]]).
     */
-  def replayBatches(
-      batches: Seq[DataFrame],
+  def service(
       winnerCol: String,
       loserCol: String,
-      rounds: Int = 5): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var pairs = emptyPairsLike(batches.head, winnerCol, loserCol)
-    val steps = batches.zipWithIndex.map { case (b, i) =>
-      val r = mergeAndRate(pairs, b, winnerCol, loserCol, rounds)
-      pairs = r.pairs
-      r.ratings.select(lit(i.toLong).as("batch_id"), col("item"),
-        col("wins"), col("matches"), col("rating"), col("rank"))
-    }
-    steps.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` merges each micro-batch's
-    * duel counts and hands the post-merge ratings (with `batch_id`)
-    * to `onBatch`. At-least-once guard: the pair-count merge is NOT
-    * idempotent (re-merging double-counts), so the closure skips any
-    * batch id it has already merged — the [[ContinualCounts]]
-    * discipline.
-    */
-  def start(
-      incoming: DataFrame,
-      winnerCol: String,
-      loserCol: String,
-      rounds: Int = 5,
-      queryName: String = "continual_preference")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(winnerCol, loserCol, rounds)(onBatch))
-      .start()
-
-  private[graft] def batchStep(
-      winnerCol: String,
-      loserCol: String,
-      rounds: Int)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var pairs: DataFrame = null
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val base =
-          if (pairs == null) emptyPairsLike(batch, winnerCol, loserCol)
-          else pairs
-        val r = mergeAndRate(base, batch, winnerCol, loserCol, rounds)
-        pairs = r.pairs
-        lastMerged = batchId
-        onBatch(r.ratings.select(lit(batchId).as("batch_id"),
-          col("item"), col("wins"), col("matches"), col("rating"),
-          col("rank")))
-      }
-  }
+      rounds: Int = 5): ContinualService[Option[DataFrame]] =
+    ContinualService(_ => None, (pairs, batch, batchId) => {
+      val (ratings, merged) = mergeAndRate(
+        pairs.getOrElse(emptyPairsLike(batch, winnerCol, loserCol)),
+        batch, winnerCol, loserCol, rounds)
+      (ratings.select(lit(batchId).as("batch_id"), col("item"),
+        col("wins"), col("matches"), col("rating"), col("rank")),
+        Some(merged))
+    })
 
   /** Typed empty accumulator: the pair table's item type is DERIVED
     * from the incoming batch's winner/loser columns rather than

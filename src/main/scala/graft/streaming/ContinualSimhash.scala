@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.functions.TextFunctions
@@ -35,15 +34,9 @@ import graft.operators.TextDedup
   * contract): a document is a duplicate iff the initial corpus or a
   * STRICTLY EARLIER batch's survivor sits within `maxHamming`;
   * within-batch duplicates are not collapsed, so the flow replays
-  * deterministically given the batch split ([[replayBatches]]).
+  * deterministically given the batch split ([[Continual.replay]]).
   */
 object ContinualSimhash {
-
-  /** One checked batch: incoming rows with verdicts (idCol, is_dup,
-    * matched_id — the smallest matching corpus id, null when new),
-    * plus the grown signature table (id, sig).
-    */
-  final case class CheckedBatch(checked: DataFrame, index: DataFrame)
 
   private def signatures(
       df: DataFrame, textCol: String, idCol: String,
@@ -51,6 +44,10 @@ object ContinualSimhash {
     TextDedup.simhashSignatures(df, textCol, idCol, hashFn, bits)
       .select(col(idCol).as("id"), col("sig"))
 
+  /** One checked batch: incoming rows with verdicts (idCol, is_dup,
+    * matched_id — the smallest matching corpus id, null when new),
+    * plus the grown signature table (id, sig).
+    */
   def checkAndAppend(
       index: DataFrame,
       batch: DataFrame,
@@ -58,7 +55,7 @@ object ContinualSimhash {
       idCol: String,
       maxHamming: Int = 8,
       hashFn: Column => Column = TextFunctions.md5Hash60,
-      bits: Int = 60): CheckedBatch = {
+      bits: Int = 60): (DataFrame, DataFrame) = {
     // sign-once discipline (round 14): the batch is tokenized and
     // signed EXACTLY ONCE into a materialized signature delta; the
     // probe reads it and the state grows by a lazy semi-join of the
@@ -80,82 +77,24 @@ object ContinualSimhash {
           col("matched_id")))
     val survIds = checked.filter(!col("is_dup"))
       .select(col(idCol).as("id"))
-    CheckedBatch(checked,
+    (checked,
       index.unionByName(batchSigs.join(survIds, Seq("id"), "leftsemi")))
   }
 
-  /** Deterministic batch-mode replay of the stream: fold
-    * [[checkAndAppend]] over an ordered batch sequence from the
-    * initial corpus' signatures. Output: every incoming row as
-    * (idCol, batch_id, is_dup, matched_id). The streaming entry
-    * [[start]] produces exactly these rows for the same batch split —
-    * pinned by the StreamingSpec MemoryStream equivalence test.
-    */
-  def replayBatches(
-      corpus0: DataFrame,
-      batches: Seq[DataFrame],
-      textCol: String,
-      idCol: String,
-      maxHamming: Int = 8,
-      hashFn: Column => Column = TextFunctions.md5Hash60,
-      bits: Int = 60): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var ix = Materialize.cut(
-      signatures(corpus0, textCol, idCol, hashFn, bits))
-    val checked = batches.zipWithIndex.map { case (b, i) =>
-      val r = checkAndAppend(ix, b, textCol, idCol, maxHamming, hashFn,
-        bits)
-      ix = r.index
-      r.checked.select(col(idCol), lit(i.toLong).as("batch_id"),
-        col("is_dup"), col("matched_id"))
-    }
-    checked.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` routes each arriving
-    * micro-batch through [[checkAndAppend]] against the accumulated
-    * signatures and hands the verdict frame (with `batch_id`) to
-    * `onBatch`. At-least-once guard: growing the index twice for one
-    * batch id is NOT idempotent (the second delivery would self-match
-    * against the first), so re-delivered ids are skipped.
-    */
-  def start(
-      incoming: DataFrame,
+  /** The [[Continual]] service: [[checkAndAppend]] from corpus0. */
+  def service(
       corpus0: DataFrame,
       textCol: String,
       idCol: String,
       maxHamming: Int = 8,
       hashFn: Column => Column = TextFunctions.md5Hash60,
-      bits: Int = 60,
-      queryName: String = "continual_simhash_dedup")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(corpus0, textCol, idCol, maxHamming,
-        hashFn, bits)(onBatch))
-      .start()
-
-  private[graft] def batchStep(
-      corpus0: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int,
-      hashFn: Column => Column,
-      bits: Int)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var ix: DataFrame = null
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        if (ix == null)
-          ix = Materialize.cut(
-            signatures(corpus0, textCol, idCol, hashFn, bits))
-        val r = checkAndAppend(ix, batch, textCol, idCol, maxHamming,
-          hashFn, bits)
-        ix = r.index
-        lastMerged = batchId
-        onBatch(r.checked.select(lit(batchId).as("batch_id"),
-          col(idCol), col("is_dup"), col("matched_id")))
-      }
-  }
+      bits: Int = 60): ContinualService[DataFrame] =
+    ContinualService(
+      _ => Materialize.cut(signatures(corpus0, textCol, idCol, hashFn, bits)),
+      (ix, batch, batchId) => {
+        val (checked, next) = checkAndAppend(ix, batch, textCol, idCol,
+          maxHamming, hashFn, bits)
+        (checked.select(col(idCol), lit(batchId).as("batch_id"),
+          col("is_dup"), col("matched_id")), next)
+      })
 }

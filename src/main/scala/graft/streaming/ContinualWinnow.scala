@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
 import graft.operators.TextDedup
@@ -30,7 +29,7 @@ import graft.operators.TextDedup
   * a document overlaps iff the initial corpus or a STRICTLY EARLIER
   * batch's survivor shares >= minShared pruned fingerprints;
   * within-batch overlaps are not collapsed, so the flow replays
-  * deterministically given the batch split ([[replayBatches]]).
+  * deterministically given the batch split ([[Continual.replay]]).
   */
 object ContinualWinnow {
 
@@ -38,8 +37,6 @@ object ContinualWinnow {
     * is_overlap, matched_id — the smallest overlapping corpus id,
     * null when new), plus the grown fingerprint index (id, pos, fp).
     */
-  final case class CheckedBatch(checked: DataFrame, index: DataFrame)
-
   def checkAndAppend(
       index: DataFrame,
       batch: DataFrame,
@@ -48,7 +45,7 @@ object ContinualWinnow {
       k: Int = 3,
       w: Int = 4,
       minShared: Int = 3,
-      maxDf: Int = 50): CheckedBatch = {
+      maxDf: Int = 50): (DataFrame, DataFrame) = {
     // sign-once discipline (round 14): the batch is fingerprinted
     // EXACTLY ONCE into a materialized delta; the probe reads it and
     // the state grows by a lazy semi-join of the SAME rows against the
@@ -72,87 +69,27 @@ object ContinualWinnow {
           col("matched_id")))
     val survIds = checked.filter(!col("is_overlap"))
       .select(col(idCol).as("id"))
-    CheckedBatch(checked,
+    (checked,
       index.unionByName(batchFps.join(survIds, Seq("id"), "leftsemi")))
   }
 
-  /** Deterministic batch-mode replay of the stream: fold
-    * [[checkAndAppend]] over an ordered batch sequence from the
-    * initial corpus' fingerprints. Output: every incoming row as
-    * (idCol, batch_id, is_overlap, matched_id). The streaming entry
-    * [[start]] produces exactly these rows for the same batch split —
-    * pinned by the StreamingSpec MemoryStream equivalence test.
-    */
-  def replayBatches(
-      corpus0: DataFrame,
-      batches: Seq[DataFrame],
-      textCol: String,
-      idCol: String,
-      k: Int = 3,
-      w: Int = 4,
-      minShared: Int = 3,
-      maxDf: Int = 50): DataFrame = {
-    require(batches.nonEmpty, "replayBatches: need at least one batch")
-    var ix = Materialize.cut(
-      TextDedup.winnowFingerprints(corpus0, textCol, idCol, k, w)
-        .select(col(idCol).as("id"), col("pos"), col("fp")))
-    val checked = batches.zipWithIndex.map { case (b, i) =>
-      val r = checkAndAppend(ix, b, textCol, idCol, k, w, minShared,
-        maxDf)
-      ix = r.index
-      r.checked.select(col(idCol), lit(i.toLong).as("batch_id"),
-        col("is_overlap"), col("matched_id"))
-    }
-    checked.reduce(_.unionByName(_))
-  }
-
-  /** The streaming entry: `foreachBatch` routes each arriving
-    * micro-batch through [[checkAndAppend]] against the accumulated
-    * index and hands the verdict frame (with `batch_id`) to
-    * `onBatch`. At-least-once guard: growing the index twice for one
-    * batch id is NOT idempotent (the second delivery would self-match
-    * against the first), so re-delivered ids are skipped.
-    */
-  def start(
-      incoming: DataFrame,
+  /** The [[Continual]] service: [[checkAndAppend]] from corpus0. */
+  def service(
       corpus0: DataFrame,
       textCol: String,
       idCol: String,
       k: Int = 3,
       w: Int = 4,
       minShared: Int = 3,
-      maxDf: Int = 50,
-      queryName: String = "continual_winnow_overlap")(
-      onBatch: DataFrame => Unit): StreamingQuery =
-    incoming.writeStream
-      .queryName(queryName)
-      .foreachBatch(batchStep(corpus0, textCol, idCol, k, w, minShared,
-        maxDf)(onBatch))
-      .start()
-
-  private[graft] def batchStep(
-      corpus0: DataFrame,
-      textCol: String,
-      idCol: String,
-      k: Int,
-      w: Int,
-      minShared: Int,
-      maxDf: Int)(
-      onBatch: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    var ix: DataFrame = null
-    var lastMerged = -1L
-    (batch, batchId) =>
-      if (batchId > lastMerged) {
-        if (ix == null)
-          ix = Materialize.cut(
-            TextDedup.winnowFingerprints(corpus0, textCol, idCol, k, w)
-              .select(col(idCol).as("id"), col("pos"), col("fp")))
-        val r = checkAndAppend(ix, batch, textCol, idCol, k, w,
-          minShared, maxDf)
-        ix = r.index
-        lastMerged = batchId
-        onBatch(r.checked.select(lit(batchId).as("batch_id"),
-          col(idCol), col("is_overlap"), col("matched_id")))
-      }
-  }
+      maxDf: Int = 50): ContinualService[DataFrame] =
+    ContinualService(
+      _ => Materialize.cut(
+        TextDedup.winnowFingerprints(corpus0, textCol, idCol, k, w)
+          .select(col(idCol).as("id"), col("pos"), col("fp"))),
+      (ix, batch, batchId) => {
+        val (checked, next) = checkAndAppend(ix, batch, textCol, idCol, k,
+          w, minShared, maxDf)
+        (checked.select(col(idCol), lit(batchId).as("batch_id"),
+          col("is_overlap"), col("matched_id")), next)
+      })
 }

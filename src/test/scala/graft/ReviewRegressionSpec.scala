@@ -205,16 +205,18 @@ class ReviewRegressionSpec extends SparkSpec {
 
   test("continual replayBatches rejects an empty batch sequence " +
     "instead of throwing from reduce") {
-    import graft.streaming.{ContinualCoverage, ContinualWinnow}
+    import graft.streaming.{Continual, ContinualCoverage, ContinualWinnow}
     val vocab = TextAnalysis.wordpieceVocab(
       Seq("abc abc").toDF("text"), "text")
     val corpus0 = Seq((1L, "a b c")).toDF("id", "text")
     val e1 = intercept[IllegalArgumentException] {
-      ContinualCoverage.replayBatches(vocab, Seq.empty, "text", "id")
+      Continual.replay(ContinualCoverage.service(vocab, "text", "id"),
+        Seq.empty)
     }
     assert(e1.getMessage.contains("at least one batch"))
     val e2 = intercept[IllegalArgumentException] {
-      ContinualWinnow.replayBatches(corpus0, Seq.empty, "text", "id")
+      Continual.replay(ContinualWinnow.service(corpus0, "text", "id"),
+        Seq.empty)
     }
     assert(e2.getMessage.contains("at least one batch"))
   }

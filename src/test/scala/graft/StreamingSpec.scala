@@ -2,11 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Velocity
-import graft.streaming.StreamingOps
+import graft.streaming.{Continual, ContinualService, StreamingOps}
 import graft.streaming.StreamingOps.{VCount, VEvent}
 
 /** Stream/batch equivalence for the streaming surface: the same rows fed
@@ -367,17 +368,19 @@ class StreamingSpec extends SparkSpec {
     val streamed = scala.collection.mutable.ArrayBuffer.empty[Verdict]
     val mem = MemoryStream[(Long, Seq[Double])]
     val stream = mem.toDF().toDF("id", "vec")
-    val q = ContinualDedup.start(stream, corpus0, "id", "vec", centroids,
-      threshold = 0.8, dim = 4) { checked => streamed ++= rows(checked) }
+    val svc = ContinualDedup.service(corpus0, "id", "vec", centroids,
+      threshold = 0.8, dim = 4)
+    val q = Continual.start(svc, stream, "continual_semantic_dedup") {
+      checked => streamed ++= rows(checked)
+    }
     mem.addData(batch1: _*)
     q.processAllAvailable()
     mem.addData(batch2: _*)
     q.processAllAvailable()
     q.stop()
 
-    val replayed = rows(ContinualDedup.replayBatches(corpus0,
-      Seq(batch1.toDF("id", "vec"), batch2.toDF("id", "vec")),
-      "id", "vec", centroids, threshold = 0.8, dim = 4))
+    val replayed = rows(Continual.replay(svc,
+      Seq(batch1.toDF("id", "vec"), batch2.toDF("id", "vec"))))
     assert(streamed.toSet === replayed)
     val verdicts = replayed.map(v => v._1 -> ((v._4, v._5))).toMap
     assert(verdicts(1L) === ((true, 100L)))
@@ -400,16 +403,18 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     val mem = MemoryStream[String]
-    val q = ContinualCounts.start(mem.toDF().toDF("item"), "item", watch,
-      d = 4, w = 16) { est => streamed ++= rows(est) }
+    val svc = ContinualCounts.service("item", watch, d = 4, w = 16)
+    val q = Continual.start(svc, mem.toDF().toDF("item"), "continual_counts") {
+      est => streamed ++= rows(est)
+    }
     mem.addData(b1: _*)
     q.processAllAvailable()
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
 
-    val replayed = rows(ContinualCounts.replayBatches(
-      Seq(b1.toDF("item"), b2.toDF("item")), "item", watch, d = 4, w = 16))
+    val replayed = rows(Continual.replay(svc,
+      Seq(b1.toDF("item"), b2.toDF("item"))))
     assert(streamed.toSet === replayed)
     // after the final merge, state == the one-shot batch sketch
     val oneShot = Sketches.countMinEstimate(
@@ -424,25 +429,6 @@ class StreamingSpec extends SparkSpec {
     replayed.foreach { case (b, item, est) =>
       assert(est >= truth(b)(item), s"batch $b item $item")
     }
-  }
-
-  test("continual counts: a re-delivered batch id is skipped, not " +
-    "merged twice (at-least-once foreachBatch)") {
-    import graft.streaming.ContinualCounts
-    val watch = Seq("a").toDF("item")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val step = ContinualCounts.batchStep(spark, "item", watch, 4, 16) {
-      est => got ++= est.collect()
-        .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("cms_est")))
-    }
-    val b0 = Seq("a", "a").toDF("item")
-    step(b0, 0L)
-    step(b0, 0L) // transient-failure re-delivery of the same id
-    step(Seq("a").toDF("item"), 1L)
-    // batch 0 reached the sink exactly once, and the post-batch-1
-    // estimate is 3 (2 + 1), not 5 — the pane was not merged twice
-    assert(got.count(_._1 == 0L) === 1)
-    assert(got.filter(_._1 == 1L).map(_._2) === Seq(3L))
   }
 
   test("continual minhash dedup: the foreachBatch stream equals the " +
@@ -470,7 +456,8 @@ class StreamingSpec extends SparkSpec {
     val streamed = scala.collection.mutable.ArrayBuffer.empty[Verdict]
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("id", "text")
-    val q = ContinualMinhash.start(stream, corpus0, "text", "id") {
+    val svc = ContinualMinhash.service(corpus0, "text", "id")
+    val q = Continual.start(svc, stream, "continual_minhash_dedup") {
       checked => streamed ++= rows(checked)
     }
     mem.addData(batch1: _*)
@@ -479,68 +466,14 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val replayed = rows(ContinualMinhash.replayBatches(corpus0,
-      Seq(batch1.toDF("id", "text"), batch2.toDF("id", "text")),
-      "text", "id"))
+    val replayed = rows(Continual.replay(svc,
+      Seq(batch1.toDF("id", "text"), batch2.toDF("id", "text"))))
     assert(streamed.toSet === replayed)
     val verdicts = replayed.map(v => v._1 -> ((v._3, v._4))).toMap
     assert(verdicts(1L) === ((true, 100L)))
     assert(verdicts(2L) === ((false, null)))
     assert(verdicts(3L) === ((true, 2L))) // matched a batch-1 survivor
     assert(verdicts(4L) === ((false, null)))
-  }
-
-  test("continual minhash dedup: a re-delivered batch id does not " +
-    "re-emit or re-append its survivors") {
-    import graft.streaming.ContinualMinhash
-    import graft.functions.TextFunctions
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    val other = (100 to 140).map(i => s"v$i").mkString(" ")
-    val otherNear = (100 to 140)
-      .map(i => if (i == 120) "ALTERED" else s"v$i").mkString(" ")
-    val corpus0 = Seq((100L, base)).toDF("id", "text")
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Boolean, Any)]
-    val step = ContinualMinhash.batchStep(corpus0, "text", "id",
-      n = 3, numHashes = 16, bands = 8, threshold = 0.8,
-      hashFn = TextFunctions.md5Hash60) { checked =>
-      got ++= checked.collect().map(r => (r.getAs[Long]("id"),
-        r.getAs[Long]("batch_id"), r.getAs[Boolean]("is_dup"),
-        r.getAs[Any]("matched_id")))
-    }
-    val b0 = Seq((2L, other)).toDF("id", "text")
-    step(b0, 0L)
-    step(b0, 0L) // re-delivery: survivor 2 must not re-enter the index
-    step(Seq((3L, otherNear)).toDF("id", "text"), 1L)
-    assert(got.count(_._2 == 0L) === 1)
-    val v3 = got.filter(_._2 == 1L)
-    assert(v3.map(v => (v._1, v._3, v._4)) === Seq((3L, true, 2L)))
-  }
-
-  test("continual dedup: a re-delivered batch id does not re-emit or " +
-    "re-append its survivors") {
-    import graft.streaming.ContinualDedup
-    val centroids = Seq((0, Seq(1.0, 0.0, 0.0, 0.0)),
-      (1, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cell", "cvec")
-    val corpus0 = Seq((100L, Seq(1.0, 0.0, 0.0, 0.0)))
-      .toDF("id", "vec")
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Boolean, Any)]
-    val step = ContinualDedup.batchStep(corpus0, "id", "vec", centroids,
-      threshold = 0.8, dim = 4) { checked =>
-      got ++= checked.collect().map(r => (r.getAs[Long]("id"),
-        r.getAs[Long]("batch_id"), r.getAs[Boolean]("is_dup"),
-        r.getAs[Any]("matched_id")))
-    }
-    val b0 = Seq((2L, Seq(0.0, 0.0, 1.0, 0.2))).toDF("id", "vec")
-    step(b0, 0L)
-    step(b0, 0L) // re-delivery: survivor 2 must not re-enter the corpus
-    // batch 1: id 3 duplicates survivor 2 — matched exactly once,
-    // against the single appended copy
-    step(Seq((3L, Seq(0.01, 0.0, 1.0, 0.2))).toDF("id", "vec"), 1L)
-    assert(got.count(_._2 == 0L) === 1)
-    val v3 = got.filter(_._2 == 1L)
-    assert(v3.map(v => (v._1, v._3, v._4)) === Seq((3L, true, 2L)))
   }
 
   test("continual packing: streamed manifests equal the one-shot pack") {
@@ -557,40 +490,22 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = scala.collection.mutable.Set.empty[Seq[Any]]
     val mem = MemoryStream[(Long, Long)]
-    val q = ContinualPacking.start(
-      mem.toDF().toDF("doc_id", "n_tok"), "doc_id", "n_tok", seqLen = 128) {
-      m => streamed ++= rows(m)
-    }
+    val svc = ContinualPacking.service("doc_id", "n_tok", seqLen = 128)
+    val q = Continual.start(svc, mem.toDF().toDF("doc_id", "n_tok"),
+      "continual_packing") { m => streamed ++= rows(m) }
     Seq(b1, b2, b3).foreach { b =>
       mem.addData(b: _*)
       q.processAllAvailable()
     }
     q.stop()
 
-    val replayed = rows(ContinualPacking.replayBatches(
-      Seq(b1, b2, b3).map(_.toDF("doc_id", "n_tok")),
-      "doc_id", "n_tok", seqLen = 128))
+    val replayed = rows(Continual.replay(svc,
+      Seq(b1, b2, b3).map(_.toDF("doc_id", "n_tok"))))
     assert(streamed.toSet === replayed)
     val oneShot = rows(TextAnalysis.sequencePack(
       (b1 ++ b2 ++ b3).toDF("doc_id", "n_tok"), "doc_id", "n_tok", 128)
       .withColumn("append_ok", org.apache.spark.sql.functions.lit(true)))
     assert(replayed === oneShot)
-  }
-
-  test("continual packing: a re-delivered batch id does not advance offsets") {
-    import graft.streaming.ContinualPacking
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val step = ContinualPacking.batchStep(spark, "doc_id", "n_tok", 128) {
-      m => got ++= m.collect().map(r => (r.getAs[Long]("batch_id"),
-        r.getAs[Long]("doc_id"), r.getAs[Long]("start_offset")))
-    }
-    val b0 = Seq((1L, 100L)).toDF("doc_id", "n_tok")
-    step(b0, 0L)
-    step(b0, 0L) // transient-failure re-delivery
-    step(Seq((2L, 50L)).toDF("doc_id", "n_tok"), 1L)
-    assert(got.count(_._1 == 0L) === 1)
-    // doc 2 starts at 100, not 200 — the re-delivery did not double-pack
-    assert(got.filter(_._1 == 1L).map(v => (v._2, v._3)) === Seq((2L, 100L)))
   }
 
   test("continual ANN: stream equals replay, and a re-centroided cell " +
@@ -616,10 +531,10 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = scala.collection.mutable.Set.empty[(Long, Long, Int)]
     val mem = MemoryStream[(Long, Seq[Double])]
-    val q = ContinualAnn.start(mem.toDF().toDF("id", "vec"), corpus,
-      corpusAssign, centroids0, "id", "vec", threshold = 0.5) {
-      a => streamed ++= rows(a)
-    }
+    val svc = ContinualAnn.service(corpus, corpusAssign, centroids0,
+      "id", "vec", threshold = 0.5)
+    val q = Continual.start(svc, mem.toDF().toDF("id", "vec"),
+      "continual_ann_index") { a => streamed ++= rows(a) }
     Seq(batch1, batch2).foreach { b =>
       mem.addData(b: _*)
       q.processAllAvailable()
@@ -627,8 +542,7 @@ class StreamingSpec extends SparkSpec {
     q.stop()
 
     val batchDfs = Seq(batch1.toDF("id", "vec"), batch2.toDF("id", "vec"))
-    val replayed = rows(ContinualAnn.replayBatches(corpus, corpusAssign,
-      centroids0, batchDfs, "id", "vec", threshold = 0.5))
+    val replayed = rows(Continual.replay(svc, batchDfs))
     assert(streamed.toSet === replayed)
     assert(replayed === Set((1L, 0L, 1), (2L, 1L, 1)))
     // the contrast: the frozen index would have misplaced id 2
@@ -638,8 +552,7 @@ class StreamingSpec extends SparkSpec {
       .toSeq === Seq((2L, 0)))
     // final centroids: cell 0 untouched byte-for-byte; cell 1 is the
     // 12 dp-rounded mean of its three members (101, 1, 2)
-    val cent = ContinualAnn.replayCentroids(corpus, corpusAssign,
-      centroids0, batchDfs, "id", "vec", threshold = 0.5)
+    val cent = Continual.replayState(svc, batchDfs).centroids
       .collect().map(r => r.getAs[Int]("cell") ->
         r.getAs[Seq[Double]]("cvec")).toMap
     assert(cent(0) === Seq(1.0, 0.0, 0.0, 0.0))
@@ -647,30 +560,6 @@ class StreamingSpec extends SparkSpec {
     cent(1).zip(want).foreach { case (g, w) =>
       assert(math.abs(g - w) < 1e-11, s"cell 1 got ${cent(1)}")
     }
-  }
-
-  test("continual ANN: a re-delivered batch id is skipped, not folded " +
-    "twice (at-least-once foreachBatch)") {
-    import graft.operators.Similarity
-    import graft.streaming.ContinualAnn
-    val centroids0 = Seq((0, Seq(1.0, 0.0, 0.0, 0.0)),
-      (1, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cell", "cvec")
-    val corpus = Seq((101L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("id", "vec")
-    val corpusAssign = Similarity.ivfAssign(corpus, "id", "vec", centroids0)
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    val step = ContinualAnn.batchStep(corpus, corpusAssign, centroids0,
-      "id", "vec", threshold = 0.5) { a =>
-      got ++= a.collect().map(r => (r.getAs[Long]("batch_id"),
-        r.getAs[Long]("id"), r.getAs[Int]("cell")))
-    }
-    val b0 = Seq((1L, Seq(0.6, 0.8, 0.0, 0.0))).toDF("id", "vec")
-    step(b0, 0L)
-    step(b0, 0L) // transient-failure re-delivery: id 1 must not
-                 // re-enter the membership or re-weight the mean
-    step(Seq((2L, Seq(0.75, 0.62, 0.0, 0.0))).toDF("id", "vec"), 1L)
-    assert(got.count(_._1 == 0L) === 1)
-    // batch 1 routed by the singly-repaired centroid (0.3, 0.9, 0, 0)
-    assert(got.filter(_._1 == 1L).map(v => (v._2, v._3)) === Seq((2L, 1)))
   }
 
   test("continual frontier: stream equals replay; canonical dedup, " +
@@ -695,17 +584,17 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = scala.collection.mutable.Set.empty[V]
     val mem = MemoryStream[(Long, String)]
-    val q = ContinualFrontier.start(mem.toDF().toDF("id", "url"),
-      "id", "url", rules, delayMs = 100L) { v => streamed ++= rows(v) }
+    val svc = ContinualFrontier.service("id", "url", rules, delayMs = 100L)
+    val q = Continual.start(svc, mem.toDF().toDF("id", "url"),
+      "continual_frontier") { v => streamed ++= rows(v) }
     Seq(batch1, batch2).foreach { b =>
       mem.addData(b: _*)
       q.processAllAvailable()
     }
     q.stop()
 
-    val replayed = rows(ContinualFrontier.replayBatches(
-      Seq(batch1.toDF("id", "url"), batch2.toDF("id", "url")),
-      "id", "url", rules, delayMs = 100L))
+    val replayed = rows(Continual.replay(svc,
+      Seq(batch1.toDF("id", "url"), batch2.toDF("id", "url"))))
     assert(streamed.toSet === replayed)
     assert(replayed === Set(
       (1L, 0L, false, "h.com", true, 1L, 0L),
@@ -716,33 +605,14 @@ class StreamingSpec extends SparkSpec {
       (6L, 1L, false, "h.com", true, 2L, 100L)))
   }
 
-  test("continual frontier: a re-delivered batch id is skipped — no " +
-    "double verdicts, no rank advance") {
-    import graft.streaming.ContinualFrontier
-    val rules = Seq(("zz.zz", "/no/", false)).toDF("host", "prefix", "allow")
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Any)]
-    val step = ContinualFrontier.batchStep("id", "url", rules, 100L) {
-      v => got ++= v.collect().map(r => (r.getAs[Long]("batch_id"),
-        r.getAs[Long]("id"), r.getAs[Any]("host_rank")))
-    }
-    val b0 = Seq((1L, "https://h.com/a")).toDF("id", "url")
-    step(b0, 0L)
-    step(b0, 0L) // re-delivery: must not emit twice or mark seen twice
-    step(Seq((2L, "https://h.com/b")).toDF("id", "url"), 1L)
-    assert(got.count(_._1 == 0L) === 1)
-    // id 2 ranks 2 (after the SINGLE fold of batch 0), not 3
-    assert(got.filter(_._1 == 1L).map(v => (v._2, v._3)) === Seq((2L, 2L)))
-  }
-
   test("continual preference: post-batch ratings equal the one-shot " +
     "computation over the prefix") {
     import graft.operators.Preference
     import graft.streaming.ContinualPreference
     val b0 = Seq(("A", "B"), ("A", "B"), ("B", "C")).toDF("w", "l")
     val b1 = Seq(("C", "A"), ("B", "A")).toDF("w", "l")
-    val replay = ContinualPreference.replayBatches(Seq(b0, b1), "w", "l")
-      .collect()
+    val replay = Continual.replay(ContinualPreference.service("w", "l"),
+      Seq(b0, b1)).collect()
     // after batch 1 the ratings must match bradleyTerry over b0 ∪ b1
     val oneShot = Preference.bradleyTerry(b0.unionByName(b1), "w", "l")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -759,26 +629,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getInt(5))).toSet
     assert(after0 === oneShot0)
-  }
-
-  test("continual preference: a re-delivered batch id does not " +
-    "double-count duels") {
-    import graft.streaming.ContinualPreference
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, Long)]
-    val step = ContinualPreference.batchStep("w", "l", 5) {
-      r => got ++= r.collect()
-        .map(x => (x.getAs[Long]("batch_id"), x.getAs[String]("item"),
-          x.getAs[Long]("wins")))
-    }
-    val b0 = Seq(("A", "B"), ("A", "B")).toDF("w", "l")
-    step(b0, 0L)
-    step(b0, 0L) // transient-failure re-delivery
-    step(Seq(("B", "A")).toDF("w", "l"), 1L)
-    assert(got.count(_._1 == 0L) === 2) // two items, one delivery
-    // post-batch-1 wins: A has 2 (not 4), B has 1
-    assert(got.filter(_._1 == 1L).map(v => (v._2, v._3)).toSet ===
-      Set(("A", 2L), ("B", 1L)))
   }
 
   test("continual winnow overlap: the stream emits exactly the replay " +
@@ -802,7 +652,8 @@ class StreamingSpec extends SparkSpec {
     val streamed = scala.collection.mutable.ArrayBuffer.empty[Verdict]
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("id", "text")
-    val q = ContinualWinnow.start(stream, corpus0, "text", "id") {
+    val svc = ContinualWinnow.service(corpus0, "text", "id")
+    val q = Continual.start(svc, stream, "continual_winnow_overlap") {
       checked => streamed ++= rows(checked)
     }
     mem.addData(batch1: _*)
@@ -811,38 +662,14 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val replayed = rows(ContinualWinnow.replayBatches(corpus0,
-      Seq(batch1.toDF("id", "text"), batch2.toDF("id", "text")),
-      "text", "id"))
+    val replayed = rows(Continual.replay(svc,
+      Seq(batch1.toDF("id", "text"), batch2.toDF("id", "text"))))
     assert(streamed.toSet === replayed)
     val verdicts = replayed.map(v => v._1 -> ((v._3, v._4))).toMap
     assert(verdicts(1L) === ((true, 100L)))
     assert(verdicts(2L) === ((false, null)))
     assert(verdicts(3L) === ((true, 2L))) // matched a batch-1 survivor
     assert(verdicts(4L) === ((false, null)))
-  }
-
-  test("continual winnow overlap: a re-delivered batch id does not " +
-    "re-emit or re-append its survivors") {
-    import graft.streaming.ContinualWinnow
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    val other = (100 to 140).map(i => s"v$i").mkString(" ")
-    val corpus0 = Seq((100L, base)).toDF("id", "text")
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Boolean, Any)]
-    val step = ContinualWinnow.batchStep(corpus0, "text", "id",
-      k = 3, w = 4, minShared = 3, maxDf = 50) { checked =>
-      got ++= checked.collect().map(r => (r.getAs[Long]("id"),
-        r.getAs[Long]("batch_id"), r.getAs[Boolean]("is_overlap"),
-        r.getAs[Any]("matched_id")))
-    }
-    val b0 = Seq((2L, other)).toDF("id", "text")
-    step(b0, 0L)
-    step(b0, 0L) // re-delivery: survivor 2 must not re-enter the index
-    step(Seq((3L, other)).toDF("id", "text"), 1L)
-    assert(got.count(_._2 == 0L) === 1)
-    val v3 = got.filter(_._2 == 1L)
-    assert(v3.map(v => (v._1, v._3, v._4)) === Seq((3L, true, 2L)))
   }
 
   test("continual simhash dedup: the foreachBatch stream equals the " +
@@ -867,7 +694,8 @@ class StreamingSpec extends SparkSpec {
     val streamed = scala.collection.mutable.ArrayBuffer.empty[Verdict]
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("id", "text")
-    val q = ContinualSimhash.start(stream, corpus0, "text", "id") {
+    val svc = ContinualSimhash.service(corpus0, "text", "id")
+    val q = Continual.start(svc, stream, "continual_simhash_dedup") {
       checked => streamed ++= rows(checked)
     }
     mem.addData(batch1: _*)
@@ -876,40 +704,14 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val replayed = rows(ContinualSimhash.replayBatches(corpus0,
-      Seq(batch1.toDF("id", "text"), batch2.toDF("id", "text")),
-      "text", "id"))
+    val replayed = rows(Continual.replay(svc,
+      Seq(batch1.toDF("id", "text"), batch2.toDF("id", "text"))))
     assert(streamed.toSet === replayed)
     val verdicts = replayed.map(v => v._1 -> ((v._3, v._4))).toMap
     assert(verdicts(1L) === ((true, 100L)))
     assert(verdicts(2L) === ((false, null)))
     assert(verdicts(3L) === ((true, 2L))) // matched a batch-1 survivor
     assert(verdicts(4L) === ((false, null)))
-  }
-
-  test("continual simhash dedup: a re-delivered batch id does not " +
-    "re-emit or re-append its survivors") {
-    import graft.streaming.ContinualSimhash
-    import graft.functions.TextFunctions
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    val other = (100 to 140).map(i => s"v$i").mkString(" ")
-    val corpus0 = Seq((100L, base)).toDF("id", "text")
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Boolean, Any)]
-    val step = ContinualSimhash.batchStep(corpus0, "text", "id",
-      maxHamming = 8, hashFn = TextFunctions.md5Hash60, bits = 60) {
-      checked =>
-      got ++= checked.collect().map(r => (r.getAs[Long]("id"),
-        r.getAs[Long]("batch_id"), r.getAs[Boolean]("is_dup"),
-        r.getAs[Any]("matched_id")))
-    }
-    val b0 = Seq((2L, other)).toDF("id", "text")
-    step(b0, 0L)
-    step(b0, 0L) // re-delivery: survivor 2 must not re-enter the index
-    step(Seq((3L, other)).toDF("id", "text"), 1L)
-    assert(got.count(_._2 == 0L) === 1)
-    val v3 = got.filter(_._2 == 1L)
-    assert(v3.map(v => (v._1, v._3, v._4)) === Seq((3L, true, 2L)))
   }
 
   private def crawlMediaRow(id: Long, text: String)
@@ -951,7 +753,8 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = scala.collection.mutable.ArrayBuffer.empty[Row]
     val mem = MemoryStream[Multimodal.MediaRow]
-    val q = ContinualCrawl.start(mem.toDF(), index0, vocab) { m =>
+    val svc = ContinualCrawl.service(index0, vocab)
+    val q = Continual.start(svc, mem.toDF(), "continual_crawl") { m =>
       streamed ++= rows(m)
     }
     mem.addData(batch1: _*)
@@ -960,8 +763,7 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val replay = ContinualCrawl.replayBatches(index0, vocab,
-      Seq(batch1.toDS(), batch2.toDS()))
+    val replay = Continual.replay(svc, Seq(batch1.toDF(), batch2.toDF()))
     assert(streamed.toSet === rows(replay))
     val byId = replay.collect().map(r =>
       r.getAs[Long]("media_id") -> r).toMap
@@ -977,38 +779,6 @@ class StreamingSpec extends SparkSpec {
       && byId(21L).getAs[Long]("start_offset") ===
         byId(11L).getAs[Long]("n_tokens"))
     assert(byId(21L).getAs[Boolean]("append_ok"))
-  }
-
-  test("continual crawl service: a re-delivered batch id neither " +
-    "re-emits nor advances the index or offsets") {
-    import graft.functions.TextFunctions
-    import graft.operators.{TextAnalysis, TextDedup}
-    import graft.streaming.ContinualCrawl
-    val enNew = "a fresh page of perfectly ordinary words for the corpus"
-    val enMore = "the corpus keeps growing with more of the simplest words"
-    val vocab = TextAnalysis.wordpieceVocab(
-      Seq(enNew, enMore).toDF("text"), "text")
-    val index0 = TextDedup.buildMinhashIndex(
-      Seq((1L, "the quick brown fox jumps over the lazy dog today"))
-        .toDF("doc_id", "text"), "text", "doc_id",
-      hashFn = TextFunctions.fastHash)
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Boolean, Any)]
-    val step = ContinualCrawl.batchStep(index0, vocab,
-      graft.pipeline.WarcPipeline.WarcPipelineConfig()) { m =>
-      got ++= m.collect().map(r => (r.getAs[Long]("batch_id"),
-        r.getAs[Long]("media_id"), r.getAs[Boolean]("is_dup"),
-        r.getAs[Any]("start_offset")))
-    }
-    val b0 = Seq(crawlMediaRow(11L, enNew)).toDF()
-    step(b0, 0L)
-    step(b0, 0L) // re-delivery: no second emit, no offset advance
-    step(Seq(crawlMediaRow(20L, enNew), crawlMediaRow(21L, enMore))
-      .toDF(), 1L)
-    assert(got.count(_._1 == 0L) === 1)
-    val v = got.filter(_._1 == 1L).map(r => r._2 -> ((r._3, r._4))).toMap
-    assert(v(20L)._1 === true)   // dup of survivor 11, not re-counted
-    assert(v(21L)._1 === false)
   }
 
   test("continual tokenizer coverage: the stream emits exactly the " +
@@ -1032,7 +802,8 @@ class StreamingSpec extends SparkSpec {
     val streamed = scala.collection.mutable.ArrayBuffer.empty[Cov]
     val mem = MemoryStream[(String, String)]
     val stream = mem.toDF().toDF("source", "text")
-    val q = ContinualCoverage.start(stream, vocab, "text", "source") {
+    val svc = ContinualCoverage.service(vocab, "text", "source")
+    val q = Continual.start(svc, stream, "continual_tokenizer_coverage") {
       cov => streamed ++= rows(cov)
     }
     mem.addData(batch1: _*)
@@ -1041,9 +812,8 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val replayed = rows(ContinualCoverage.replayBatches(vocab,
-      Seq(batch1.toDF("source", "text"), batch2.toDF("source", "text")),
-      "text", "source"))
+    val replayed = rows(Continual.replay(svc,
+      Seq(batch1.toDF("source", "text"), batch2.toDF("source", "text"))))
     assert(streamed.toSet === replayed)
     val byKey = replayed.map(c => (c._1, c._2) -> ((c._3, c._4, c._6)))
       .toMap
@@ -1052,20 +822,176 @@ class StreamingSpec extends SparkSpec {
     assert(byKey((1L, "A")) === ((2L, 1L, 1.0))) // overlong -> one [UNK]
   }
 
-  test("continual tokenizer coverage: a re-delivered batch id does " +
-    "not re-emit its rows") {
-    import graft.streaming.ContinualCoverage
-    import graft.operators.TextAnalysis
-    val vocab = TextAnalysis.wordpieceVocab(
-      Seq("abc abc").toDF("text"), "text")
-    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val step = ContinualCoverage.batchStep(vocab, "text", "source") {
-      cov => got ++= cov.collect().map(_.getAs[Long]("batch_id"))
+  // ---- the shared continual fold, one row per service ----
+  //
+  // Applying b0 twice would show: a dedup index self-matches b0's
+  // re-emitted rows, and a sketch, pair table, offset or rank
+  // double-counts into b1's rows. `batch1` is the service's own
+  // expectation on the b1 rows the sink receives. Every row checks the
+  // fold's contract against Continual.replay over (b0, b1):
+  //   1. re-delivery after a successful sink emits nothing and does not
+  //      double-apply: b1's rows still equal the replay's;
+  //   2. a sink that throws on batch 0 loses nothing: the re-delivered
+  //      batch 0 reaches the sink exactly once with the replay's batch-0
+  //      rows, and batch 1 then matches the replay;
+  //   3. every frame handed to the sink has the replay's columns, in
+  //      order.
+  import StreamingSpec.FoldCase
+
+  private def checkFold[S](c: FoldCase[S]): Unit = {
+    val svc = c.svc()
+    val (b0, b1) = (c.b0(), c.b1())
+    val replay = Continual.replay(svc, Seq(b0, b1))
+    def ofBatch(rows: Seq[Row], id: Long): Seq[Row] =
+      rows.filter(_.getAs[Long]("batch_id") == id)
+    def canon(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+    val want = replay.collect().toSeq
+    assert(ofBatch(want, 0L).nonEmpty && ofBatch(want, 1L).nonEmpty)
+    def run(failFirst: Boolean): Seq[Row] = {
+      val got = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var failNext = failFirst
+      val step = Continual.batchStep(svc) { out =>
+        assert(out.columns.toSeq === replay.columns.toSeq)
+        if (failNext) {
+          failNext = false
+          throw new IllegalStateException("sink down")
+        }
+        got ++= out.collect()
+      }
+      if (failFirst) intercept[IllegalStateException](step(b0, 0L))
+      else step(b0, 0L)
+      step(b0, 0L) // re-delivery, after a failed or a successful sink
+      step(b1, 1L)
+      got.toSeq
     }
-    val b0 = Seq(("A", "abc")).toDF("source", "text")
-    step(b0, 0L)
-    step(b0, 0L) // re-delivery: must not double-emit
-    step(Seq(("A", "abc abc")).toDF("source", "text"), 1L)
-    assert(got.toSeq === Seq(0L, 1L))
+    Seq(false, true).foreach { failFirst =>
+      val got = run(failFirst)
+      Seq(0L, 1L).foreach { id =>
+        assert(canon(ofBatch(got, id)) === canon(ofBatch(want, id)),
+          s"batch $id, sink failed first: $failFirst")
+      }
+      c.batch1(ofBatch(got, 1L))
+    }
   }
+
+  private val minhashText = (1 to 40).map(i => s"w$i").mkString(" ")
+  private val otherText = (100 to 140).map(i => s"v$i").mkString(" ")
+  private val enNew = "a fresh page of perfectly ordinary words for the corpus"
+  private val enMore = "the corpus keeps growing with more of the simplest words"
+  private def centroids2 = Seq((0, Seq(1.0, 0.0, 0.0, 0.0)),
+    (1, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cell", "cvec")
+  private def idText(id: Long, t: String) = Seq((id, t)).toDF("id", "text")
+  private def verdict(flag: String)(rows: Seq[Row]): Seq[(Long, Boolean, Any)] =
+    rows.map(r => (r.getAs[Long]("id"), r.getAs[Boolean](flag),
+      r.getAs[Any]("matched_id")))
+
+  private val foldCases: Seq[FoldCase[_]] = Seq(
+    FoldCase("continual counts: a re-delivered batch id is skipped, not " +
+      "merged twice (at-least-once foreachBatch)",
+      () => graft.streaming.ContinualCounts.service(
+        "item", Seq("a").toDF("item"), 4, 16),
+      () => Seq("a", "a").toDF("item"), () => Seq("a").toDF("item"),
+      // the post-batch-1 estimate is 3 (2 + 1), not 5
+      rows => assert(rows.map(_.getAs[Long]("cms_est")) === Seq(3L))),
+    FoldCase("continual minhash dedup: a re-delivered batch id does not " +
+      "re-emit or re-append its survivors",
+      () => graft.streaming.ContinualMinhash.service(
+        idText(100L, minhashText), "text", "id"),
+      () => idText(2L, otherText),
+      () => idText(3L, (100 to 140)
+        .map(i => if (i == 120) "ALTERED" else s"v$i").mkString(" ")),
+      rows => assert(verdict("is_dup")(rows) === Seq((3L, true, 2L)))),
+    FoldCase("continual dedup: a re-delivered batch id does not re-emit or " +
+      "re-append its survivors",
+      () => graft.streaming.ContinualDedup.service(
+        Seq((100L, Seq(1.0, 0.0, 0.0, 0.0))).toDF("id", "vec"), "id", "vec",
+        centroids2, threshold = 0.8, dim = 4),
+      () => Seq((2L, Seq(0.0, 0.0, 1.0, 0.2))).toDF("id", "vec"),
+      // id 3 duplicates survivor 2 — matched against the single copy
+      () => Seq((3L, Seq(0.01, 0.0, 1.0, 0.2))).toDF("id", "vec"),
+      rows => assert(verdict("is_dup")(rows) === Seq((3L, true, 2L)))),
+    FoldCase("continual packing: a re-delivered batch id does not advance offsets",
+      () => graft.streaming.ContinualPacking.service("doc_id", "n_tok", 128),
+      () => Seq((1L, 100L)).toDF("doc_id", "n_tok"),
+      () => Seq((2L, 50L)).toDF("doc_id", "n_tok"),
+      // doc 2 starts at 100, not 200
+      rows => assert(rows.map(r => (r.getAs[Long]("doc_id"),
+        r.getAs[Long]("start_offset"))) === Seq((2L, 100L)))),
+    FoldCase("continual ANN: a re-delivered batch id is skipped, not folded " +
+      "twice (at-least-once foreachBatch)",
+      () => {
+        val corpus = Seq((101L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("id", "vec")
+        graft.streaming.ContinualAnn.service(corpus,
+          graft.operators.Similarity.ivfAssign(corpus, "id", "vec", centroids2),
+          centroids2, "id", "vec", threshold = 0.5)
+      },
+      () => Seq((1L, Seq(0.6, 0.8, 0.0, 0.0))).toDF("id", "vec"),
+      () => Seq((2L, Seq(0.75, 0.62, 0.0, 0.0))).toDF("id", "vec"),
+      // routed by the singly-repaired centroid (0.3, 0.9, 0, 0)
+      rows => assert(rows.map(r => (r.getAs[Long]("id"),
+        r.getAs[Int]("cell"))) === Seq((2L, 1)))),
+    FoldCase("continual frontier: a re-delivered batch id is skipped — no " +
+      "double verdicts, no rank advance",
+      () => graft.streaming.ContinualFrontier.service("id", "url",
+        Seq(("zz.zz", "/no/", false)).toDF("host", "prefix", "allow"), 100L),
+      () => Seq((1L, "https://h.com/a")).toDF("id", "url"),
+      () => Seq((2L, "https://h.com/b")).toDF("id", "url"),
+      // id 2 ranks 2 (after the SINGLE fold of batch 0), not 3
+      rows => assert(rows.map(r => (r.getAs[Long]("id"),
+        r.getAs[Any]("host_rank"))) === Seq((2L, 2L)))),
+    FoldCase("continual preference: a re-delivered batch id does not " +
+      "double-count duels",
+      () => graft.streaming.ContinualPreference.service("w", "l", 5),
+      () => Seq(("A", "B"), ("A", "B")).toDF("w", "l"),
+      () => Seq(("B", "A")).toDF("w", "l"),
+      // post-batch-1 wins: A has 2 (not 4), B has 1
+      rows => assert(rows.map(r => (r.getAs[String]("item"),
+        r.getAs[Long]("wins"))).toSet === Set(("A", 2L), ("B", 1L)))),
+    FoldCase("continual winnow overlap: a re-delivered batch id does not " +
+      "re-emit or re-append its survivors",
+      () => graft.streaming.ContinualWinnow.service(
+        idText(100L, minhashText), "text", "id",
+        k = 3, w = 4, minShared = 3, maxDf = 50),
+      () => idText(2L, otherText), () => idText(3L, otherText),
+      rows => assert(verdict("is_overlap")(rows) === Seq((3L, true, 2L)))),
+    FoldCase("continual simhash dedup: a re-delivered batch id does not " +
+      "re-emit or re-append its survivors",
+      () => graft.streaming.ContinualSimhash.service(
+        idText(100L, minhashText), "text", "id", maxHamming = 8,
+        hashFn = graft.functions.TextFunctions.md5Hash60, bits = 60),
+      () => idText(2L, otherText), () => idText(3L, otherText),
+      rows => assert(verdict("is_dup")(rows) === Seq((3L, true, 2L)))),
+    FoldCase("continual crawl service: a re-delivered batch id neither " +
+      "re-emits nor advances the index or offsets",
+      () => graft.streaming.ContinualCrawl.service(
+        graft.operators.TextDedup.buildMinhashIndex(
+          Seq((1L, "the quick brown fox jumps over the lazy dog today"))
+            .toDF("doc_id", "text"), "text", "doc_id",
+          hashFn = graft.functions.TextFunctions.fastHash),
+        graft.operators.TextAnalysis.wordpieceVocab(
+          Seq(enNew, enMore).toDF("text"), "text")),
+      () => Seq(crawlMediaRow(11L, enNew)).toDF(),
+      () => Seq(crawlMediaRow(20L, enNew), crawlMediaRow(21L, enMore)).toDF(),
+      // 20 is a dup of survivor 11 (not re-counted), 21 is new
+      rows => assert(rows.map(r => (r.getAs[Long]("media_id"),
+        r.getAs[Boolean]("is_dup"))).toSet === Set((20L, true), (21L, false)))),
+    FoldCase("continual tokenizer coverage: a re-delivered batch id does " +
+      "not re-emit its rows",
+      () => graft.streaming.ContinualCoverage.service(
+        graft.operators.TextAnalysis.wordpieceVocab(
+          Seq("abc abc").toDF("text"), "text"), "text", "source"),
+      () => Seq(("A", "abc")).toDF("source", "text"),
+      () => Seq(("A", "abc abc")).toDF("source", "text"),
+      rows => assert(rows.map(_.getAs[String]("group_key")) === Seq("A"))))
+
+  foldCases.foreach(c => test(c.name)(checkFold(c)))
+}
+
+object StreamingSpec {
+  final case class FoldCase[S](
+      name: String,
+      svc: () => ContinualService[S],
+      b0: () => DataFrame,
+      b1: () => DataFrame,
+      batch1: Seq[Row] => Unit)
 }
