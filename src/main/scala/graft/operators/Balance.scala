@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** T2/T3: class rebalancing (reference `transform_data.py:103-111` —
@@ -12,10 +11,11 @@ import org.apache.spark.sql.functions._
   * SURVEY.md preamble; here strategy is an explicit argument).
   *
   * Undersampling: exact without-replacement downsample of every class to
-  * the minority size — per-class `row_number` over a seeded content hash
-  * of the tie-break columns (recompute-stable; see [[Split]] on why
-  * `rand(seed)` order is a cluster hazard), keep `rn <= n_min`. One
-  * shuffle on the label column.
+  * the minority size — keep each class's first `n_min` rows in the
+  * seeded content-hash order of the tie-break columns that
+  * [[Split.stratified]] ranks by (recompute-stable; see [[Split]] on why
+  * `rand(seed)` order is a cluster hazard), through the same two-level
+  * [[GlobalRank.rowNumber]], so no task ever sorts a whole class.
   *
   * SMOTE ([[Smote]]): minority kNN in feature space via LSH bucketing,
   * then seeded linear interpolation toward a sampled neighbor. No
@@ -24,47 +24,24 @@ import org.apache.spark.sql.functions._
 object Balance {
 
   /** T3: downsample every class to the global minority-class size.
-    * Deterministic under seed (tie-broken by `tieBreak` columns).
+    * Deterministic under seed; `tieBreak` columns must make the order
+    * total (an id column).
     */
   def undersample(
       df: DataFrame,
       labelCol: String,
       seed: Long,
-      tieBreak: Seq[Column] = Nil): DataFrame = {
-    val order: Seq[Column] = tieBreak match {
-      case Nil => Seq(rand(seed))
-      case tb  => xxhash64(tb :+ lit(seed): _*) +: tb
-    }
-    val wRank = Window.partitionBy(col(labelCol)).orderBy(order: _*)
+      tieBreak: Seq[Column]): DataFrame = {
+    require(tieBreak.nonEmpty,
+      "undersample needs content tie-break columns: membership must be a " +
+        "function of row content, not partition layout")
+    // driver read bounded by the class count: `counts` holds one row
+    // per distinct label, and first() brings back its one-row minimum
     val counts = df.groupBy(col(labelCol)).agg(count(lit(1)).as("__cnt"))
     val minCount = counts.agg(min(col("__cnt"))).first().getLong(0)
-    df.withColumn("__rn", row_number().over(wRank))
+    Split.saltedRank(df, labelCol, seed, tieBreak)
       .filter(col("__rn") <= lit(minCount))
-      .drop("__rn")
-  }
-
-  /** Random oversampling (imblearn RandomOverSampler shape): upsample
-    * every class to the majority size by emitting floor/ceil copies per
-    * row, deterministic under seed. Row-explosion via explode(sequence),
-    * not a driver loop.
-    */
-  def oversampleRandom(
-      df: DataFrame,
-      labelCol: String,
-      seed: Long): DataFrame = {
-    val wAll = Window.partitionBy(col(labelCol))
-    val withN = df.withColumn("__n", count(lit(1)).over(wAll))
-    val maxCount = withN.agg(max(col("__n"))).first().getLong(0)
-    // each row contributes base = floor(max/n) copies, plus one more for
-    // the first (max % n) rows in a seeded random order
-    val wRank = Window.partitionBy(col(labelCol)).orderBy(rand(seed))
-    withN
-      .withColumn("__rn", row_number().over(wRank))
-      .withColumn("__base", (lit(maxCount) / col("__n")).cast("long"))
-      .withColumn("__extra",
-        when(col("__rn") <= lit(maxCount) % col("__n"), 1L).otherwise(0L))
-      .withColumn("__copy", explode(sequence(lit(1L), col("__base") + col("__extra"))))
-      .drop("__n", "__rn", "__base", "__extra", "__copy")
+      .select(df.columns.map(col): _*)
   }
 
   /** Class counts — the audit the reference logs before/after resampling

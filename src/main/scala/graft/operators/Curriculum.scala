@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Curriculum ordering: assign every row a GLOBAL 1-based training-order
@@ -13,17 +12,13 @@ import org.apache.spark.sql.functions._
   *
   * The naive formulation is `row_number() OVER (ORDER BY bucket, hash)`
   * — a single-partition sort of the whole corpus, the canonical
-  * scale-killer. Here the rank is TWO-LEVEL (the [[Split]] trick,
-  * globalized): rows range-bucket by the TOP BITS of the shuffle hash
-  * (order-aligned: every row of salt s precedes every row of salt s+1
-  * within a bucket), `row_number` runs within (bucket, salt) across
-  * full parallelism, and per-(bucket, salt) offsets come from a window
-  * over the tiny (buckets × 64)-row count aggregate, broadcast back
-  * in-plan. Byte-identical to the single-window rank at any scale.
+  * scale-killer. Here the rank is [[GlobalRank.rowNumber]] with no key
+  * and the bucket (difficulty bucket, salt), the salt being the TOP 6
+  * BITS of the shuffle hash (order-aligned: every row of salt s
+  * precedes every row of salt s+1 within a bucket). Byte-identical to
+  * the single-window rank at any scale.
   */
 object Curriculum {
-
-  private val SaltBuckets = 64
 
   /** `df` plus `train_order` (global 1-based index in
     * (`bucket` asc, `hash` asc, `tieCol` asc) order). `hash` must be a
@@ -39,24 +34,13 @@ object Curriculum {
       hashBits: Int = 60): DataFrame = {
     require(hashBits > 6 && hashBits <= 63,
       s"hashBits must be in (6, 63], got $hashBits")
-    val tagged0 = df
+    val tagged = df
       .withColumn("__b", bucket)
       .withColumn("__h", hash)
       .withColumn("__salt", shiftrightunsigned(col("__h"), hashBits - 6))
-    val wRank = Window.partitionBy(col("__b"), col("__salt"))
-      .orderBy(col("__h"), col(tieCol))
-    // offsets: one row per (bucket, salt) — the only unpartitioned
-    // window runs over that tiny aggregate (buckets × 64 rows)
-    val wOff = Window.orderBy(col("__b"), col("__salt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = tagged0.groupBy(col("__b"), col("__salt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col("__b").as("__bk"), col("__salt").as("__sk"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__off"))
-    tagged0
-      .join(broadcast(offsets),
-        col("__b") <=> col("__bk") && col("__salt") === col("__sk"))
-      .withColumn("train_order", row_number().over(wRank) + col("__off"))
-      .drop("__bk", "__sk", "__b", "__h", "__salt", "__off")
+    GlobalRank.rowNumber(tagged, keys = Nil,
+        bucket = Seq(col("__b"), col("__salt")), order = Seq(col("__h"), col(tieCol)))
+      .withColumnRenamed("__rn", "train_order")
+      .drop("__b", "__h", "__salt", "__n")
   }
 }

@@ -19,11 +19,11 @@ import graft.Materialize
   *
   * Scale shape: everything funnels through ONE hash aggregation to the
   * distinct-score table (cardinality = score precision, not corpus
-  * rows), and the cumulative counts over that table use quantile-bucketed
-  * two-level prefix sums — a window only ever sorts one score-range
-  * bucket, never the whole score axis (the [[Selection]] pattern; a
-  * plain `ORDER BY score` cumsum would be a single-task sort of every
-  * distinct score at 100 TB).
+  * rows), and the cumulative counts over that table are
+  * [[GlobalRank.runningSum]] prefix sums over quantile buckets — a
+  * window only ever sorts one score-range bucket, never the whole score
+  * axis (the [[Selection]] pattern; a plain `ORDER BY score` cumsum
+  * would be a single-task sort of every distinct score at 100 TB).
   */
 object Evaluation {
 
@@ -33,9 +33,8 @@ object Evaluation {
     * positives/negatives with score <= this row's score).
     *
     * Buckets: boundaries from `percentile_approx` over the scored rows
-    * (approximation affects balance only — counts merge exactly);
-    * within-bucket prefix sums by a per-bucket window; cross-bucket
-    * offsets from the `buckets`-row aggregate (broadcast).
+    * (approximation affects balance only — counts merge exactly), the
+    * order-aligned bucket of the [[GlobalRank.runningSum]].
     */
   def cumulativeByScore(
       df: DataFrame,
@@ -63,23 +62,10 @@ object Evaluation {
       .agg(
         sum(when(label === 1, 1L).otherwise(0L)).as("pos_c"),
         sum(when(label === 1, 0L).otherwise(1L)).as("neg_c"))
-    val wIn = Window.partitionBy(col("__b")).orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // offsets: one row per bucket (<= `buckets` rows) — the only
-    // unpartitioned window runs over that tiny aggregate (benign)
-    val offsets = distinctScores.groupBy(col("__b"))
-      .agg(sum(col("pos_c")).as("__bp"), sum(col("neg_c")).as("__bn"))
-      .select(col("__b"),
-        coalesce(sum(col("__bp")).over(wOff), lit(0L)).as("__op"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__on"))
-    distinctScores
-      .join(broadcast(offsets.withColumnRenamed("__b", "__ob")),
-        col("__b") === col("__ob"))
-      .select(col("score"), col("pos_c"), col("neg_c"),
-        (sum(col("pos_c")).over(wIn) + col("__op")).as("cum_pos_le"),
-        (sum(col("neg_c")).over(wIn) + col("__on")).as("cum_neg_le"))
+    GlobalRank.runningSum(distinctScores, keys = Nil, bucket = Seq(col("__b")),
+        order = Seq(col("score")),
+        values = Seq("pos_c" -> "cum_pos_le", "neg_c" -> "cum_neg_le"), inclusive = true)
+      .select(col("score"), col("pos_c"), col("neg_c"), col("cum_pos_le"), col("cum_neg_le"))
   }
 
   /** Exact ROC AUC with average-rank tie handling (Mann–Whitney):

@@ -24,16 +24,32 @@ import graft.functions.TextFunctions
   *
   * Scale shape: quotas come from a |domains|-row aggregate that stays
   * in-plan (broadcast back, no driver collect). The per-domain rank is
-  * the same two-level salted rank as [[Split.stratified]] — rows are
-  * range-bucketed by the top 6 bits of the 60-bit ordering hash, ranked
-  * within (domain, bucket), and offset by the broadcast per-bucket
-  * counts — so no single task ever sorts a whole domain (a corpus is
-  * typically dominated by one web domain the way the fraud table is
-  * dominated by one class).
+  * [[GlobalRank.rowNumber]] bucketed by the top 6 bits of the 60-bit
+  * ordering hash ([[hashSalted]]), as [[Split.stratified]] does — so no
+  * single task ever sorts a whole domain (a corpus is typically
+  * dominated by one web domain the way the fraud table is dominated by
+  * one class).
   */
 object Mixture {
 
   private val SaltShift = 54 // md5Hash60 is 60-bit non-negative; top 6 bits
+
+  /** `df` plus `__h`, the seeded content hash of the id, and `__salt`,
+    * its top 6 bits: an order-aligned bucket for ranking by
+    * (`__h`, id) through [[GlobalRank]].
+    */
+  private def hashSalted(df: DataFrame, idCol: String, seed: Long): DataFrame =
+    df.withColumn("__h", TextFunctions.md5Hash60(
+        concat(col(idCol).cast("string"), lit(":" + seed))))
+      .withColumn("__salt", shiftright(col("__h"), SaltShift))
+
+  /** `df` plus `__rn`, the exact 1-based rank within `groupCol` in
+    * seeded content-hash order (see [[hashSalted]]).
+    */
+  private def hashRank(
+      df: DataFrame, groupCol: String, idCol: String, seed: Long): DataFrame =
+    GlobalRank.rowNumber(hashSalted(df, idCol, seed), keys = Seq(col(groupCol)),
+      bucket = Seq(col("__salt")), order = Seq(col("__h"), col(idCol)))
 
   /** Content-stable Bernoulli sample: keep a row iff its seeded content
     * hash falls under `frac` of the hash space. `df.sample(frac, seed)`
@@ -86,23 +102,8 @@ object Mixture {
     val quotas = counts.crossJoin(broadcast(total))
       .select(col(domainCol),
         floor(col("__wd") * col("__N")).cast("long").as("__quota"))
-    val hash = TextFunctions.md5Hash60(
-      concat(col(idCol).cast("string"), lit(":" + seed)))
-    val tagged0 = dfW
-      .withColumn("__h", hash)
-      .withColumn("__salt", shiftright(col("__h"), SaltShift))
-    val wRank = Window.partitionBy(col(domainCol), col("__salt"))
-      .orderBy(col("__h"), col(idCol))
-    val wOff = Window.partitionBy(col(domainCol)).orderBy(col("__salt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = tagged0.groupBy(col(domainCol), col("__salt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col(domainCol), col("__salt"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__off"))
-    tagged0
-      .join(broadcast(offsets), Seq(domainCol, "__salt"))
+    hashRank(dfW, domainCol, idCol, seed)
       .join(broadcast(quotas), Seq(domainCol))
-      .withColumn("__rn", row_number().over(wRank) + col("__off"))
       .filter(col("__rn") <= col("__quota"))
       .select(df.columns.map(col): _*)
   }
@@ -116,31 +117,15 @@ object Mixture {
     * eval set, which would silently decalibrate metric history.
     * Groups smaller than k keep everything.
     *
-    * Scale: the same two-level salted topology as [[sampleMixture]] —
-    * rank within (group, hash-range salt), per-bucket offsets from the
-    * broadcast (groups × 64)-row aggregate — so no task ever sorts a
-    * whole group.
+    * Scale: the same [[GlobalRank]] rank as [[sampleMixture]], so no
+    * task ever sorts a whole group. A NULL group is a group: it keeps
+    * its k smallest hashes like any other.
     */
   def evalSample(
       df: DataFrame, groupCol: String, idCol: String, k: Int,
       seed: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val hash = TextFunctions.md5Hash60(
-      concat(col(idCol).cast("string"), lit(":" + seed)))
-    val tagged0 = df
-      .withColumn("__h", hash)
-      .withColumn("__salt", shiftright(col("__h"), SaltShift))
-    val wRank = Window.partitionBy(col(groupCol), col("__salt"))
-      .orderBy(col("__h"), col(idCol))
-    val wOff = Window.partitionBy(col(groupCol)).orderBy(col("__salt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = tagged0.groupBy(col(groupCol), col("__salt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col(groupCol), col("__salt"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__off"))
-    tagged0
-      .join(broadcast(offsets), Seq(groupCol, "__salt"))
-      .withColumn("__rn", row_number().over(wRank) + col("__off"))
+    hashRank(df, groupCol, idCol, seed)
       .filter(col("__rn") <= k)
       .select(df.columns.map(col): _*)
   }
@@ -157,12 +142,9 @@ object Mixture {
     * with everything after it in hash order — deterministic and
     * engine-replayable, no knapsack).
     *
-    * Scale: identical two-level topology to [[sampleMixture]], with the
-    * per-(domain, salt-bucket) window computing a running SUM instead
-    * of a rank; per-bucket token offsets come from the broadcast
-    * (domains × 64)-row aggregate, so the global running sum is
-    * `within-bucket cumsum + offset` and no task ever scans a whole
-    * domain.
+    * Scale: the same salt-bucketed order as [[sampleMixture]], through
+    * [[GlobalRank.runningSum]] instead of a rank, so no task ever scans
+    * a whole domain.
     *
     * @param tokenCol precomputed per-row token count (e.g.
     *                 `size(TextFunctions.tokens(col))` or
@@ -188,25 +170,10 @@ object Mixture {
     val quotas = totals.crossJoin(broadcast(budget))
       .select(col(domainCol),
         floor(col("__wd") * col("__B")).cast("long").as("__tq"))
-    val hash = TextFunctions.md5Hash60(
-      concat(col(idCol).cast("string"), lit(":" + seed)))
-    val tagged0 = dfW
-      .withColumn("__h", hash)
-      .withColumn("__salt", shiftright(col("__h"), SaltShift))
-    val wSum = Window.partitionBy(col(domainCol), col("__salt"))
-      .orderBy(col("__h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.partitionBy(col(domainCol)).orderBy(col("__salt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = tagged0.groupBy(col(domainCol), col("__salt"))
-      .agg(sum(col(tokenCol)).cast("long").as("__bt"))
-      .select(col(domainCol), col("__salt"),
-        coalesce(sum(col("__bt")).over(wOff), lit(0L)).as("__off"))
-    tagged0
-      .join(broadcast(offsets), Seq(domainCol, "__salt"))
+    GlobalRank.runningSum(hashSalted(dfW, idCol, seed), keys = Seq(col(domainCol)),
+        bucket = Seq(col("__salt")), order = Seq(col("__h"), col(idCol)),
+        values = Seq(tokenCol -> "__cum"), inclusive = true)
       .join(broadcast(quotas), Seq(domainCol))
-      .withColumn("__cum",
-        sum(col(tokenCol)).over(wSum).cast("long") + col("__off"))
       .filter(col("__cum") <= col("__tq"))
       .select(df.columns.map(col): _*)
   }
@@ -381,8 +348,8 @@ object Mixture {
     * dropped, mirroring [[sampleMixture]]. The operator only ATTACHES
     * the key — the global sort is the writer's one unavoidable
     * shuffle, paid when the order is consumed, and the per-domain rank
-    * runs through the same salted two-level topology as
-    * [[sampleMixture]] (never a whole-domain window).
+    * is the same [[GlobalRank]] rank as [[sampleMixture]] (never a
+    * whole-domain window).
     */
   def interleaveByWeight(
       df: DataFrame,
@@ -395,22 +362,7 @@ object Mixture {
     val spark = df.sparkSession
     import spark.implicits._
     val wdf = weights.toSeq.sortBy(_._1).toDF(domainCol, "__w")
-    val hash = TextFunctions.md5Hash60(
-      concat(col(idCol).cast("string"), lit(":" + seed)))
-    val tagged = df.join(broadcast(wdf), Seq(domainCol))
-      .withColumn("__h", hash)
-      .withColumn("__salt", shiftright(col("__h"), SaltShift))
-    val wRank = Window.partitionBy(col(domainCol), col("__salt"))
-      .orderBy(col("__h"), col(idCol))
-    val wOff = Window.partitionBy(col(domainCol)).orderBy(col("__salt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = tagged.groupBy(col(domainCol), col("__salt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col(domainCol), col("__salt"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__off"))
-    tagged
-      .join(broadcast(offsets), Seq(domainCol, "__salt"))
-      .withColumn("__rn", row_number().over(wRank) + col("__off"))
+    hashRank(df.join(broadcast(wdf), Seq(domainCol)), domainCol, idCol, seed)
       .withColumn("order_key",
         (col("__rn").cast("double") - lit(0.5)) / col("__w"))
       .select((df.columns.map(col) :+ col("order_key")): _*)

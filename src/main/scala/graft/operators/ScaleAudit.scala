@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -235,9 +234,8 @@ object ScaleAudit {
     * assignments that a partitioned writer can execute without a
     * global sort, and its output doubles as the manifest.
     *
-    * The running total uses the two-level cumulative sum (per-row
-    * cumsum inside fixed-width id buckets + a broadcast prefix-offset
-    * table over bucket totals) — no single-partition window ever sees
+    * The running total is the exclusive [[GlobalRank.runningSum]] over
+    * fixed-width id buckets — no single-partition window ever sees
     * per-row data. Output per shard: row count, byte size, and the
     * [min_id, max_id] range; bounded by corpusBytes/target rows.
     */
@@ -251,18 +249,8 @@ object ScaleAudit {
       .withColumn("__b",
         ((col("__id") - pmod(col("__id"), lit(bucketWidth)))
           / lit(bucketWidth)).cast("long"))
-    val wIn = Window.partitionBy(col("__b")).orderBy(col("__id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("__b"))
-      .agg(sum(col("__sz")).as("__bt"))
-      .select(col("__b"),
-        coalesce(sum(col("__bt")).over(wOff), lit(0L)).as("__off"))
-    val planned = base
-      .withColumn("__cin", sum(col("__sz")).over(wIn))
-      .join(broadcast(offsets), Seq("__b"))
-      .withColumn("__start", col("__cin") + col("__off") - col("__sz"))
+    val planned = GlobalRank.runningSum(base, keys = Nil, bucket = Seq(col("__b")),
+        order = Seq(col("__id")), values = Seq("__sz" -> "__start"), inclusive = false)
       .withColumn("shard",
         ((col("__start") - pmod(col("__start"), lit(targetBytes)))
           / lit(targetBytes)).cast("long"))

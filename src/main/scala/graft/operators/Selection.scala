@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Materialize
@@ -15,11 +14,12 @@ import graft.Materialize
   * ENTIRE partition through one task — a multi-terabyte single-task
   * sort for any large source at corpus scale (the same defect class
   * [[Split.stratified]] fixed for the per-class rank). The fix here is
-  * the same two-level rank, with one twist: the stratified split orders
-  * by a UNIFORM hash, so order-aligned range buckets fall out of the
-  * hash's top bits for free — a quality score has arbitrary skewed
-  * distribution, so the order-aligned buckets come from per-key
-  * **approximate quantile boundaries** instead.
+  * the same [[GlobalRank.rowNumber]] two-level rank, with one twist:
+  * the stratified split orders by a UNIFORM hash, so order-aligned
+  * range buckets fall out of the hash's top bits for free — a quality
+  * score has arbitrary skewed distribution, so the order-aligned
+  * buckets come from per-key **approximate quantile boundaries**
+  * instead.
   *
   * Approximation NEVER touches the answer: boundaries only decide which
   * bucket a row sorts in (balance), while the per-(key, bucket) counts
@@ -70,9 +70,9 @@ object Selection {
     // unguarded filter() would have dropped all elements on a null
     // comparison and put them in bucket 0, ranking missing scores ABOVE
     // every real one
-    // null-safe key joins throughout: a NULL key is a real group (the
-    // naive window ranks it like any other partition) — plain equi-joins
-    // would silently drop every null-key row even at frac = 1
+    // null-safe key join (as in GlobalRank): a NULL key is a real group
+    // (the naive window ranks it like any other partition) — a plain
+    // equi-join would silently drop every null-key row even at frac = 1
     val bucketed = df
       .join(broadcast(bounds.withColumnRenamed(keyCol, "__bk")),
         col(keyCol) <=> col("__bk"))
@@ -80,21 +80,8 @@ object Selection {
         when(score.isNull, lit(buckets))
           .otherwise(size(filter(col("__bounds"), b => b > score))))
       .drop("__bk", "__bounds")
-    val order = score.desc +: tieBreak.map(c => col(c).asc)
-    val wRank = Window.partitionBy(col(keyCol), col("__b")).orderBy(order: _*)
-    val wOff = Window.partitionBy(col(keyCol)).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wTot = Window.partitionBy(col(keyCol))
-    val offsets = bucketed.groupBy(col(keyCol), col("__b"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col(keyCol), col("__b"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__off"),
-        sum(col("__bn")).over(wTot).as("__n"))
-    bucketed
-      .join(broadcast(offsets
-          .withColumnRenamed(keyCol, "__ok").withColumnRenamed("__b", "__ob")),
-        col(keyCol) <=> col("__ok") && col("__b") === col("__ob"))
-      .withColumn("__rn", row_number().over(wRank) + col("__off"))
+    GlobalRank.rowNumber(bucketed, keys = Seq(col(keyCol)), bucket = Seq(col("__b")),
+      order = score.desc +: tieBreak.map(c => col(c).asc))
   }
 
   /** Rows ranking in the top `ceil(frac · n_key)` of their key by

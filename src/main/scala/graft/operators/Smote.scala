@@ -56,6 +56,8 @@ object Smote {
       numHashTables: Int = 3,
       bucketLength: Double = 2.0,
       idCol: String): DataFrame = {
+    // driver collect bounded by the class count: one (label, count)
+    // row per distinct label
     val counts = df.groupBy(col(labelCol)).agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.get(0) -> r.getLong(1))
     require(counts.length >= 2, "SMOTE needs at least two classes")
@@ -113,28 +115,18 @@ object Smote {
 
     // fan out each minority row to its exact synthetic copy count: base
     // copies for all, one extra for the first (nNeeded % nMin) rows in a
-    // seeded pseudo-random global order. The global rank is two-level —
-    // rank within hash salt buckets plus per-bucket offsets — so no
-    // single partition ever holds the whole minority class. Offsets are
-    // a window over the 64-row per-salt count aggregate, broadcast back
-    // in-plan: no driver collect, one job instead of two.
+    // seeded pseudo-random global order — (salt, hash, id), ranked by
+    // [[GlobalRank.rowNumber]] with the `pmod` salt as its bucket, so no
+    // single partition ever holds the whole minority class. The salt is
+    // not order-aligned with the hash; it defines the order's first key.
     val base = nNeeded / nMin
     val extra = nNeeded % nMin
     val salts = 64
     val salted = minority
       .join(neighbors, Seq("__id"), "left")
       .withColumn("__salt", pmod(xxhash64(col("__id"), lit(seed)), lit(salts.toLong)))
-    val wRank = Window.partitionBy(col("__salt"))
-      .orderBy(xxhash64(col("__id"), lit(seed + 1)), col("__id"))
-    val wOff = Window.orderBy(col("__salt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = salted.groupBy(col("__salt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col("__salt"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__off"))
-    val fanned = salted
-      .join(broadcast(offsets), Seq("__salt"))
-      .withColumn("__rn", row_number().over(wRank) + col("__off"))
+    val fanned = GlobalRank.rowNumber(salted, keys = Nil, bucket = Seq(col("__salt")),
+        order = Seq(xxhash64(col("__id"), lit(seed + 1)), col("__id")))
       .withColumn("__copies",
         lit(base) + when(col("__rn") <= extra, 1L).otherwise(0L))
       .filter(col("__copies") > 0)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** T1: stratified train/test split (reference `transform_data.py:121-123`,
@@ -21,26 +20,21 @@ import org.apache.spark.sql.functions._
   * parity with sklearn is impossible (different PRNG streams); parity is
   * distributional: disjoint, exhaustive, per-class sizes exact.
   *
-  * Scale: the rank is TWO-LEVEL so no partition ever holds a whole
-  * class (the fraud workload is 2 classes, 90%/10% — a per-class window
-  * would funnel ~90% of the data through ONE task's sort). Rows are
-  * range-bucketed into 64 salt buckets by the TOP BITS of the ordering
+  * Scale: the rank is [[GlobalRank.rowNumber]] so no partition ever
+  * holds a whole class (the fraud workload is 2 classes, 90%/10% — a
+  * per-class window would funnel ~90% of the data through ONE task's
+  * sort). Its order-aligned bucket is the TOP 6 BITS of the ordering
   * hash (sign bit flipped so bucket id is monotone in the hash's signed
   * sort order): every row of bucket b precedes every row of bucket b+1
-  * in the global hash order, so
-  * `row_number within (class, bucket) + rows in earlier buckets`
-  * IS the global per-class rank — byte-identical membership to a
-  * single-window rank, computed across 64-way parallelism per class.
-  * Per-bucket offsets and class totals come from a window over the tiny
-  * (classes × 64)-row count aggregate, broadcast back in-plan (the same
-  * pattern as Smote's copy-fanout rank): no driver collect.
+  * in the global hash order, so the two-level rank is byte-identical
+  * membership to a single-window rank, computed across 64-way
+  * parallelism per class.
   */
 object Split {
 
   final case class SplitResult(train: DataFrame, test: DataFrame)
 
-  private val SaltBuckets = 64
-  private val SaltShift = 58 // 64 - log2(SaltBuckets) top bits
+  private val SaltShift = 58 // top 6 bits: 64 salt buckets
 
   def stratified(
       df: DataFrame,
@@ -58,17 +52,18 @@ object Split {
     val tb = if (tieBreak.nonEmpty) tieBreak else df.columns.toSeq.map(col)
     val tagged = saltedRank(df, labelCol, seed, tb)
       .withColumn("__is_test", col("__rn") <= ceil(col("__n") * lit(testFrac)))
-    val aux = Seq("__salt", "__off", "__n", "__rn", "__is_test")
     SplitResult(
-      train = tagged.filter(!col("__is_test")).drop(aux: _*).select(df.columns.map(col): _*),
-      test = tagged.filter(col("__is_test")).drop(aux: _*).select(df.columns.map(col): _*))
+      train = tagged.filter(!col("__is_test")).select(df.columns.map(col): _*),
+      test = tagged.filter(col("__is_test")).select(df.columns.map(col): _*))
   }
 
   /** The shared two-level salted per-class global rank: df plus
-    * `__salt`, `__off`, `__n` (class size) and `__rn` (exact 1-based
-    * rank in the seeded content-hash order within the class).
+    * `__salt`, `__n` (class size) and `__rn` (exact 1-based rank in the
+    * seeded content-hash order within the class). The label joins back
+    * null-safely, so a NULL label is a real class here as it is to
+    * `groupBy`. [[Balance.undersample]] ranks through the same order.
     */
-  private def saltedRank(
+  private[operators] def saltedRank(
       df: DataFrame, labelCol: String, seed: Long,
       tb: Seq[Column]): DataFrame = {
     val hash = xxhash64(tb :+ lit(seed): _*)
@@ -77,26 +72,8 @@ object Split {
     // monotone non-decreasing along the (hash, tb...) sort, and hash
     // ties (which compare by tb next) share a bucket by construction
     val salt = shiftrightunsigned(hash.bitwiseXOR(lit(Long.MinValue)), SaltShift)
-    val tagged0 = df.withColumn("__salt", salt)
-    val wRank = Window.partitionBy(col(labelCol), col("__salt"))
-      .orderBy(hash +: tb: _*)
-    val wOff = Window.partitionBy(col(labelCol)).orderBy(col("__salt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wTot = Window.partitionBy(col(labelCol))
-    val offsets = tagged0.groupBy(col(labelCol), col("__salt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col(labelCol), col("__salt"),
-        coalesce(sum(col("__bn")).over(wOff), lit(0L)).as("__off"),
-        sum(col("__bn")).over(wTot).as("__n"))
-    // null-safe label equality: a NULL label is a real class out of
-    // groupBy/Window, but NULL never equi-matches — a plain join would
-    // silently drop every null-label row from the split/folds
-    tagged0
-      .join(broadcast(offsets
-          .withColumnRenamed(labelCol, "__lk").withColumnRenamed("__salt", "__sk")),
-        col(labelCol) <=> col("__lk") && col("__salt") === col("__sk"))
-      .drop("__lk", "__sk")
-      .withColumn("__rn", row_number().over(wRank) + col("__off"))
+    GlobalRank.rowNumber(df.withColumn("__salt", salt),
+      keys = Seq(col(labelCol)), bucket = Seq(col("__salt")), order = hash +: tb)
   }
 
   /** Stratified k-fold assignment (sklearn `StratifiedKFold` semantics
@@ -120,7 +97,7 @@ object Split {
         "must be a function of row content, not partition layout")
     saltedRank(df, labelCol, seed, tieBreak)
       .withColumn("fold", pmod(col("__rn") - 1, lit(k.toLong)))
-      .drop("__salt", "__off", "__n", "__rn")
+      .drop("__salt", "__n", "__rn")
   }
 
   /** Group-aware fold assignment (sklearn `GroupKFold`'s leakage

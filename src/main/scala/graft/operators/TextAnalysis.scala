@@ -1396,11 +1396,10 @@ object TextAnalysis {
     * packing decisions are made on (vs the truncation losses
     * [[truncationStats]] tables for the pad-and-truncate alternative).
     *
-    * The global running token offset uses the same two-level
-    * cumulative sum as [[ScaleAudit.planExportShards]]: per-row cumsum
-    * inside fixed-width id buckets plus a broadcast prefix-offset
-    * table over bucket totals — no single-partition window ever sees
-    * per-row data, so the plan distributes at any corpus size. All
+    * The global running token offset is the exclusive
+    * [[GlobalRank.runningSum]] over fixed-width id buckets, as in
+    * [[ScaleAudit.planExportShards]] — no single-partition window ever
+    * sees per-row data, so the plan distributes at any corpus size. All
     * arithmetic is integer; the oracle (harness q386) replays it with
     * one window cumsum.
     *
@@ -1425,20 +1424,10 @@ object TextAnalysis {
       .withColumn("__b",
         ((col("__id") - pmod(col("__id"), lit(bucketWidth)))
           / lit(bucketWidth)).cast("long"))
-    val wIn = Window.partitionBy(col("__b")).orderBy(col("__id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("__b"))
-      .agg(sum(col("__n")).as("__bt"))
-      .select(col("__b"),
-        coalesce(sum(col("__bt")).over(wOff), lit(0L)).as("__off"))
     def seqOf(tok: Column): Column =
       ((tok - pmod(tok, lit(seqLen.toLong))) / lit(seqLen.toLong)).cast("long")
-    base
-      .withColumn("__cin", sum(col("__n")).over(wIn))
-      .join(broadcast(offsets), Seq("__b"))
-      .withColumn("start_offset", col("__cin") + col("__off") - col("__n"))
+    GlobalRank.runningSum(base, keys = Nil, bucket = Seq(col("__b")),
+        order = Seq(col("__id")), values = Seq("__n" -> "start_offset"), inclusive = false)
       .withColumn("first_seq", seqOf(col("start_offset")))
       .withColumn("last_seq",
         when(col("__n") > 0L, seqOf(col("start_offset") + col("__n") - 1L))
@@ -2103,12 +2092,11 @@ object TextAnalysis {
     * the forward-extrapolation companion to [[zipfFit]]'s head check.
     *
     * Scale shape: first-occurrence is a token-keyed min aggregate (the
-    * vocab never travels as a set), and the two running totals use a
-    * TWO-LEVEL cumulative sum — per-doc deltas cumsum within
-    * fixed-width doc-id buckets (a partitioned window), plus a
-    * broadcast prefix-offset table over bucket totals (corpus/width
-    * rows — the only unpartitioned window, 1024x smaller than the
-    * input). No global single-partition window touches per-doc rows.
+    * vocab never travels as a set), and the two running totals are one
+    * [[GlobalRank.runningSum]] over fixed-width doc-id buckets (its
+    * only unpartitioned window runs over corpus/width bucket totals,
+    * 1024x smaller than the input). No global single-partition window
+    * touches per-doc rows.
     * OLS sums decimal-accumulate 12-place products of ln values, the
     * [[zipfFit]] parity discipline.
     */
@@ -2130,21 +2118,9 @@ object TextAnalysis {
       .withColumn("__b",
         ((col("__doc") - pmod(col("__doc"), lit(bucketWidth)))
           / lit(bucketWidth)).cast("long"))
-    val wIn = Window.partitionBy(col("__b")).orderBy(col("__doc"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = perDoc
-      .withColumn("__ctn", sum(col("__nt")).over(wIn))
-      .withColumn("__cvn", sum(col("__nv")).over(wIn))
-    val wOff = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = perDoc.groupBy(col("__b"))
-      .agg(sum(col("__nt")).as("__bt"), sum(col("__nv")).as("__bv"))
-      .select(col("__b"),
-        coalesce(sum(col("__bt")).over(wOff), lit(0L)).as("__ot"),
-        coalesce(sum(col("__bv")).over(wOff), lit(0L)).as("__ov"))
-    val xy = within.join(broadcast(offsets), Seq("__b"))
-      .select((col("__ctn") + col("__ot")).as("__N"),
-        (col("__cvn") + col("__ov")).as("__V"))
+    val xy = GlobalRank.runningSum(perDoc, keys = Nil, bucket = Seq(col("__b")),
+        order = Seq(col("__doc")), values = Seq("__nt" -> "__N", "__nv" -> "__V"),
+        inclusive = true)
       .select(log(col("__N").cast("double")).as("__x"),
         log(col("__V").cast("double")).as("__y"))
     def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")

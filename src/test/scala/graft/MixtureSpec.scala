@@ -65,6 +65,20 @@ class MixtureSpec extends SparkSpec {
     assert(re === got.map(_._2).toSet)
   }
 
+  test("evalSample: a null group is a group and keeps min(k, n_null) rows") {
+    // the naive per-group window (q174's PARTITION BY source) ranks the
+    // NULL group like any other; an equi-join on the group drops it
+    val df = ((1L to 20L).map(i => (i, Option("big"))) ++
+      (50L to 57L).map(i => (i, Option.empty[String])) ++
+      Seq((90L, Option.empty[String]))).toDF("id", "src")
+    val got = Mixture.evalSample(df, "src", "id", k = 5, seed = 7L)
+    assert(got.filter($"src".isNull).count() === 5L) // min(5, 9)
+    assert(got.filter($"src" === "big").count() === 5L)
+    val small = Mixture.evalSample(df.filter($"src".isNull && $"id" < 53L),
+      "src", "id", k = 5, seed = 7L)
+    assert(small.count() === 3L) // min(5, 3): the whole null group
+  }
+
   test("sampleByTokenBudget: first-fit prefix within token quotas, salt-invariant") {
     // tokens: domain a rows carry 10 tokens each (60 rows -> 600),
     // b carry 20 (30 rows -> 600), c carry 5 (10 rows -> 50)

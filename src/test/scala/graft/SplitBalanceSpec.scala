@@ -101,13 +101,16 @@ class SplitBalanceSpec extends SparkSpec {
     assert(u.join(df, Seq("id"), "left_anti").count() === 0)
   }
 
-  test("oversampleRandom: all classes at majority size, rows from original") {
-    val o = Balance.oversampleRandom(df, "label", 42L)
-    val counts = o.groupBy("label").count().collect()
-      .map(x => x.getInt(0) -> x.getLong(1)).toMap
-    assert(counts === Map(0 -> 80L, 1 -> 80L))
-    assert(o.select("id").distinct()
-      .join(df, Seq("id"), "left_anti").count() === 0)
+  test("undersample: membership equals the naive per-class row_number window") {
+    import org.apache.spark.sql.expressions.Window
+    // reference: one whole-class window over the seeded content-hash
+    // order, keeping the first n_min = 20 rows of every class
+    val w = Window.partitionBy($"label").orderBy(xxhash64($"id", lit(42L)), $"id")
+    val ref = df.withColumn("rn", row_number().over(w)).filter($"rn" <= 20)
+      .select("id").collect().map(_.getLong(0)).toSet
+    val got = Balance.undersample(df.repartition(7), "label", 42L, Seq($"id"))
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(got === ref)
   }
 
   test("smote multiclass: every non-majority class lifted to majority size") {
