@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-cutting materialization for iterative and eager pipelines
   * (connected components, corpus-prep stage boundaries).
@@ -42,5 +43,19 @@ object Materialize {
           "(a cluster-visible path: HDFS / object store)")
       df.checkpoint() // eager + reliable
     } else df.localCheckpoint(true)
+  }
+
+  /** Drop the blocks of a frame [[cut]] returned, once every frame that
+    * read it is itself cut: after this, reading `df` fails, since its
+    * lineage is gone. Local mode frees the executor blocks now, where
+    * the context cleaner would wait for the frame to be garbage
+    * collected. Reliable mode keeps no blocks, so this is a no-op
+    * there; its files follow the checkpoint dir's own lifecycle
+    * (`spark.cleaner.referenceTracking.cleanCheckpoints`).
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+    case other => throw new IllegalArgumentException(
+      s"release expects a frame returned by Materialize.cut, got ${other.nodeName}")
   }
 }

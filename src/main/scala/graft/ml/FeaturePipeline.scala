@@ -10,8 +10,9 @@ import org.apache.spark.sql.DataFrame
   * re-expressed as one MLlib `Pipeline`.
   *
   * Stage mapping (SURVEY.md §2.9):
-  *   - M1 categorical cast  -> StringIndexer(handleInvalid="keep",
-  *     alphabetAsc — sklearn sorts categories lexicographically);
+  *   - M1 categorical cast  -> one multi-column StringIndexer
+  *     (handleInvalid="keep", alphabetAsc — sklearn sorts categories
+  *     lexicographically);
   *   - M2 one-hot           -> OneHotEncoder(dropLast=true): the indexer's
   *     keep bucket is the LAST index, so dropping it reproduces sklearn
   *     `handle_unknown='ignore'` exactly — unseen categories encode as
@@ -32,12 +33,13 @@ object FeaturePipeline {
       outputCol: String = "features")
 
   def build(cfg: FeatureConfig): Pipeline = {
-    val indexers = cfg.categoricalCols.map { c =>
-      new StringIndexer()
-        .setInputCol(c).setOutputCol(s"__${c}_idx")
-        .setHandleInvalid("keep")
-        .setStringOrderType("alphabetAsc")
-    }
+    // one multi-column stage: its fit collects every column's labels in
+    // a single pass, where a stage per column scans the input once each
+    val indexer = new StringIndexer()
+      .setInputCols(cfg.categoricalCols.toArray)
+      .setOutputCols(cfg.categoricalCols.map(c => s"__${c}_idx").toArray)
+      .setHandleInvalid("keep")
+      .setStringOrderType("alphabetAsc")
     val encoder = new OneHotEncoder()
       .setInputCols(cfg.categoricalCols.map(c => s"__${c}_idx").toArray)
       .setOutputCols(cfg.categoricalCols.map(c => s"__${c}_oh").toArray)
@@ -52,7 +54,7 @@ object FeaturePipeline {
             .setWithMean(true).setWithStd(true))
       else Seq.empty
     val numOut = if (cfg.numericCols.nonEmpty) Seq("__num_scaled") else Seq.empty
-    val catStages = if (cfg.categoricalCols.nonEmpty) indexers :+ encoder else Seq.empty
+    val catStages = if (cfg.categoricalCols.nonEmpty) Seq(indexer, encoder) else Seq.empty
     val catOut = cfg.categoricalCols.map(c => s"__${c}_oh")
     val assembler = new VectorAssembler()
       .setInputCols((numOut ++ catOut).toArray)
@@ -79,9 +81,8 @@ object FeaturePipeline {
   def featureNames(model: PipelineModel, cfg: FeatureConfig): Seq[String] = {
     val numNames = cfg.numericCols.map(c => s"num__$c")
     val labelsByCol: Map[String, Array[String]] = model.stages.collect {
-      case si: StringIndexerModel =>
-        si.getInputCol -> si.labelsArray.head
-    }.toMap
+      case si: StringIndexerModel => si.getInputCols.zip(si.labelsArray)
+    }.flatten.toMap
     val catNames = cfg.categoricalCols.flatMap { c =>
       labelsByCol(c).map(l => s"cat__${c}_$l")
     }

@@ -1,9 +1,13 @@
 package graft.pipeline
 
+import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.ml.FeaturePipeline
 import graft.ml.FeaturePipeline.FeatureConfig
 import graft.operators._
@@ -15,8 +19,11 @@ import graft.sources.{CsvSource, PipelineConfig}
   *
   * Spark shape (SURVEY.md §3): steps up to the split are ONE lazy
   * DataFrame DAG — narrow maps, one broadcast range join, three window
-  * shuffles; nothing materializes until the split's window ranking. The
-  * MLlib fit triggers its own aggregation jobs on the cached train set.
+  * shuffles. [[preprocessDataset]] materializes it once at the split
+  * input and cuts each later frame that more than one action reads, so
+  * no action re-runs the chain above it; [[runPipeline]] returns
+  * materialized outputs, and runs its two independent branches at the
+  * same time.
   */
 object Processor {
 
@@ -60,6 +67,15 @@ object Processor {
   /** EP3 (processor.py:56-85): stratified split -> fit-on-train
     * featurization -> rebalance train by strategy. Test is never
     * resampled (imblearn contract).
+    *
+    * Eager: the returned train and test are materialized
+    * ([[graft.Materialize.cut]]), and so is every frame inside that
+    * more than one action reads — the split input (the rank window and
+    * its offsets aggregate), the train side (each estimator fit and
+    * the transform) and the slim train features (SMOTE's class counts,
+    * LSH fit and both sides of its self-join). Those intermediate cuts
+    * are released before returning, on failure too, so the only blocks
+    * left are the two returned frames'.
     */
   def preprocessDataset(
       df: DataFrame,
@@ -83,37 +99,36 @@ object Processor {
         s"unknown missing value strategy: $other " +
           "(expected drop | impute | impute_median)")
     }
-    // categorical inputs must be strings for StringIndexer; numeric
-    // category codes (hour_of_day) cast through
-    val stringified = categoricalCols.foldLeft(complete)(
-      (d, c) => d.withColumn(c, col(c).cast("string")))
-    val split = Split.stratified(
-      stringified, "label", cfg.testSize, cfg.randomState, Seq(col(idCol)))
-    val fcfg = FeatureConfig(numericCols, categoricalCols)
-    // cache the train side across the estimator fits (StringIndexer /
-    // StandardScaler each scan it), then RELEASE the blocks: the split
-    // membership is a content hash, so the lazy downstream transforms
-    // recompute it identically — no leaked cache in a long session
-    val cachedTrain = split.train.cache()
-    val (model, trainF, testF) =
-      FeaturePipeline.fitTransform(cachedTrain, split.test, fcfg)
-    val names = FeaturePipeline.featureNames(model, fcfg)
-    cachedTrain.unpersist(false)
-
-    val slim = (d: DataFrame) => d.select(
-      col(idCol), col("label").cast("long").as("label"),
-      vector_to_array(col("features")).as("features"))
-    val train = cfg.imbalanceStrategy match {
-      case "smote" =>
-        Smote.smote(slim(trainF), "label", "features", k = 5,
-          seed = cfg.randomState, idCol = idCol)
-      case "undersample" =>
-        Balance.undersample(slim(trainF), "label", cfg.randomState,
-          Seq(col(idCol)))
+    // resolved before the first job, so a typo fails without any work
+    val rebalance: DataFrame => DataFrame = cfg.imbalanceStrategy match {
+      case "smote" => d =>
+        Smote.smote(d, "label", "features", k = 5, seed = cfg.randomState,
+          idCol = idCol)
+      case "undersample" => d =>
+        Balance.undersample(d, "label", cfg.randomState, Seq(col(idCol)))
       case other =>
         throw new IllegalArgumentException(s"unknown imbalance strategy: $other")
     }
-    PreppedDataset(train, slim(testF), names)
+    val slim = (d: DataFrame) => d.select(
+      col(idCol), col("label").cast("long").as("label"),
+      vector_to_array(col("features")).as("features"))
+    val fcfg = FeatureConfig(numericCols, categoricalCols)
+    val cuts = mutable.Buffer.empty[DataFrame]
+    val cut = (d: DataFrame) => { val c = Materialize.cut(d); cuts += c; c }
+    try {
+      // categorical inputs must be strings for StringIndexer; numeric
+      // category codes (hour_of_day) cast through
+      val stringified = cut(categoricalCols.foldLeft(complete)(
+        (d, c) => d.withColumn(c, col(c).cast("string"))))
+      val split = Split.stratified(
+        stringified, "label", cfg.testSize, cfg.randomState, Seq(col(idCol)))
+      val (model, trainF, testF) =
+        FeaturePipeline.fitTransform(cut(split.train), split.test, fcfg)
+      val out = PreppedDataset(cut(rebalance(cut(slim(trainF)))), cut(slim(testF)),
+        FeaturePipeline.featureNames(model, fcfg))
+      cuts --= Seq(out.train, out.test)
+      out
+    } finally cuts.foreach(Materialize.release)
   }
 
   final case class PipelineOutputs(
@@ -125,15 +140,17 @@ object Processor {
     * named parquet sinks (the reference's result dict,
     * transform_data.py:150-161).
     *
-    * Execution note: the returned frames are LAZY — each downstream
-    * action (SMOTE's internal fits, each of writeOutputs' four writes)
-    * re-executes its upstream DAG. That is correct by construction
-    * (split membership and row ids are content hashes, identical on
-    * every recomputation) and the right default for the domain-CSV
-    * scale this pipeline targets; a deployment where the upstream is
-    * expensive should cut a stage boundary on the [[PreppedDataset]]
-    * frames with [[graft.Materialize.cut]] before writing, trading
-    * checkpoint storage for the re-executions.
+    * Eager: the returned frames are materialized (see
+    * [[preprocessDataset]]), so [[writeOutputs]] and any other action
+    * on them reads their blocks and re-runs nothing upstream. They hold
+    * the only blocks the call leaves; a caller done with them drops
+    * them with [[graft.Materialize.release]] or
+    * [[graft.SessionHygiene.reset]]. The fraud and creditcard branches
+    * share no frame, so they run at the same time: fraud on the calling
+    * thread, creditcard on a fresh one, which inherits the caller's
+    * Spark local properties (job group, description, scheduler pool).
+    * Both have finished before this returns or throws; when one fails,
+    * the other's outputs are released and the first failure is thrown.
     */
   def runPipeline(spark: SparkSession, cfg: PipelineConfig): PipelineOutputs = {
     val tables = CsvSource.loadAll(spark, cfg.dataPaths)
@@ -142,25 +159,49 @@ object Processor {
     val credit = cleanCreditcard(tables("creditcard_data"))
 
     val fraudX = transformFraud(fraud, ipMap)
-    val fraudPrep = preprocessDataset(
-      fraudX, cfg, cfg.numericalFeatures, cfg.categoricalFeatures, "user_id")
 
     // content-hash row id, NOT monotonically_increasing_id: the split
     // membership and SMOTE's row identity hash on this id, and a
-    // monotonic id is a function of partition layout — each downstream
-    // action (SMOTE's fits, the four writes) re-executes this DAG, and
-    // any layout change between executions would reassign ids, flipping
-    // split membership (train/test leakage). Rows are distinct after
-    // cleanCreditcard's dedup, so the full-row hash is unique up to a
-    // 2^-64-scale birthday collision — and a pure function of content,
-    // identical on every recomputation.
+    // monotonic id is a function of partition layout — this DAG can run
+    // more than once (the impute strategies' statistics pass reads it
+    // before the first cut), and any layout change between executions
+    // would reassign ids, flipping split membership (train/test
+    // leakage). Rows are distinct after cleanCreditcard's dedup, so the
+    // full-row hash is unique up to a 2^-64-scale birthday collision —
+    // and a pure function of content, identical on every recomputation.
     val creditRenamed = credit.withColumnRenamed("Class", "label")
     val creditX = creditRenamed
       .withColumn("__row_id", xxhash64(creditRenamed.columns.map(col): _*))
     val creditNums = credit.columns.filterNot(c => c == "Class").toSeq
-    val creditPrep = preprocessDataset(
-      creditX, cfg, creditNums, Seq.empty, "__row_id")
-    PipelineOutputs(fraudPrep, creditPrep)
+
+    val (fraudPrep, creditPrep) = alongside(
+      preprocessDataset(
+        fraudX, cfg, cfg.numericalFeatures, cfg.categoricalFeatures, "user_id"),
+      preprocessDataset(creditX, cfg, creditNums, Seq.empty, "__row_id"))
+    (fraudPrep, creditPrep) match {
+      case (Success(f), Success(c)) => PipelineOutputs(f, c)
+      case _ =>
+        Seq(fraudPrep, creditPrep).foreach(_.foreach { p =>
+          Materialize.release(p.train); Materialize.release(p.test) })
+        val failures = Seq(fraudPrep, creditPrep).collect { case Failure(e) => e }
+        failures.tail.foreach(failures.head.addSuppressed)
+        throw failures.head
+    }
+  }
+
+  /** Runs `a` on the calling thread and `b` on a fresh thread, and
+    * returns once both have finished. A fresh thread, not a pooled one,
+    * because Spark's local properties are inherited when a thread is
+    * created: a pool thread carries those of whichever caller made it.
+    */
+  private def alongside[A, B](a: => A, b: => B): (Try[A], Try[B]) = {
+    @volatile var rb: Try[B] = Failure(new IllegalStateException("branch did not run"))
+    val t = new Thread(() => rb = try Success(b) catch { case e: Throwable => Failure(e) },
+      "graft-ep1-branch")
+    t.setDaemon(true)
+    t.start()
+    val ra = try Try(a) finally t.join()
+    (ra, rb)
   }
 
   def writeOutputs(out: PipelineOutputs, outDir: String): Unit = {

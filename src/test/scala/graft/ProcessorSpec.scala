@@ -1,6 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, size}
 
 import graft.pipeline.Processor
 import graft.sources.{CsvSource, PipelineConfig}
@@ -129,14 +139,111 @@ class ProcessorSpec extends SparkSpec {
     assert(fraudRows(imputed) > fraudRows(dropped))
   }
 
-  test("runPipeline leaves no net persisted blocks once outputs materialize") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+  /** Jobs started while a [[withJobLog]] block ran: each one's job
+    * group ("" when none), and the ids of those not yet ended.
+    */
+  private class JobLog extends SparkListener {
+    val groups = new ConcurrentLinkedQueue[String]
+    val started = ConcurrentHashMap.newKeySet[Int]()
+    val running = ConcurrentHashMap.newKeySet[Int]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      groups.add(Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse(""))
+      started.add(e.jobId)
+      running.add(e.jobId)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = running.remove(e.jobId)
+  }
+
+  /** Runs `body` with a [[JobLog]] attached; every event posted before
+    * `body` returned or threw has been delivered when this returns.
+    */
+  private def withJobLog[A](body: => A): (Try[A], JobLog) = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    val result = Try(body)
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(log)
+    (result, log)
+  }
+
+  private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("runPipeline returns materialized outputs holding the only new blocks") {
+    val before = persistedRdds
     val out = Processor.runPipeline(spark, cfg.copy(imbalanceStrategy = "smote"))
-    out.fraud.train.count(); out.fraud.test.count()
-    out.creditcard.train.count(); out.creditcard.test.count()
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"runPipeline leaked persisted RDDs: ${after -- before}")
+    val outputRdds = Seq(out.fraud.train, out.fraud.test,
+      out.creditcard.train, out.creditcard.test).map(_.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.id
+        case other => fail(s"output is not materialized: ${other.nodeName}")
+      })
+    // no intermediate cut (split input, train side, SMOTE input) outlives the call
+    assert(persistedRdds -- before === outputRdds.toSet)
+    SessionHygiene.reset(spark)
+    assert((persistedRdds -- before).isEmpty)
+  }
+
+  test("runPipeline runs every job, both branches', in the caller's job group") {
+    // two calls under two groups: a branch thread kept from the first
+    // call (a pooled one) would carry the first group into the second
+    val sc = spark.sparkContext
+    Seq("ep1-first", "ep1-second").foreach { group =>
+      sc.setJobGroup(group, s"EP1 in job group $group")
+      val (out, log) = try withJobLog(Processor.runPipeline(spark, cfg))
+        finally sc.clearJobGroup()
+      assert(out.isSuccess, out)
+      val groups = log.groups.asScala.toSeq
+      assert(groups.nonEmpty && groups.forall(_ == group), groups.distinct)
+    }
+  }
+
+  test("runPipeline failure: IllegalArgumentException, no job left running, no blocks") {
+    // a bogus strategy fails both branches before their first job; a
+    // string numeric column fails only the fraud branch, at the feature
+    // fit after its first cuts, while the creditcard branch is running
+    val bad = Seq(
+      cfg.copy(imbalanceStrategy = "bogus"),
+      cfg.copy(imbalanceStrategy = "smote",
+        numericalFeatures = cfg.numericalFeatures :+ "source"))
+    bad.foreach { c =>
+      val before = persistedRdds
+      val (out, log) = withJobLog(Processor.runPipeline(spark, c))
+      assert(out.failed.get.isInstanceOf[IllegalArgumentException], out)
+      assert(log.running.isEmpty, s"jobs still running: ${log.running}")
+      assert(spark.sparkContext.statusTracker.getActiveJobIds
+        .filter(log.started.contains).isEmpty)
+      assert((persistedRdds -- before).isEmpty,
+        s"a failed runPipeline left blocks: ${persistedRdds -- before}")
+    }
+  }
+
+  test("runPipeline in reliable checkpoint mode matches local mode") {
+    val smoteCfg = cfg.copy(imbalanceStrategy = "smote")
+    def shape(o: Processor.PipelineOutputs) = Seq(o.fraud, o.creditcard).map { p =>
+      def byClass(d: DataFrame) = d.groupBy("label").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val widths = p.train.select(size(col("features"))).distinct().collect()
+        .map(_.getInt(0)).toSet
+      (byClass(p.train), byClass(p.test), widths, p.featureNames)
+    }
+    val local = shape(Processor.runPipeline(spark, smoteCfg))
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft_ckpt")
+    val prior = sc.getCheckpointDir
+    // the context's checkpoint dir outlives this suite: restore it
+    if (prior.isEmpty) sc.setCheckpointDir(dir.toString)
+    spark.conf.set(Materialize.ReliableKey, "true")
+    val reliable =
+      try shape(Processor.runPipeline(spark, smoteCfg))
+      finally {
+        spark.conf.unset(Materialize.ReliableKey)
+        if (prior.isEmpty) sc.setCheckpointDir(null)
+      }
+    assert(reliable === local)
+    if (prior.isEmpty)
+      assert(Files.walk(dir).filter(Files.isRegularFile(_)).count() > 0,
+        "reliable mode wrote no checkpoint files")
   }
 
   test("yaml config round-trip") {
