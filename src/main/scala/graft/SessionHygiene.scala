@@ -12,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   * when run late in a polluted session). Dropping all cache entries and
   * persistent RDDs after every query keeps each measurement independent
   * of run order.
+  *
+  * Run it only between queries, never while a streaming query is live:
+  * it also unpersists the local-mode IP snapshot a running
+  * [[graft.streaming.StreamingScoring.enrich]] query joins, and that
+  * query's next trigger then fails. Every harness already calls it
+  * only after its queries have stopped.
   */
 object SessionHygiene {
   def reset(spark: SparkSession): Unit = {

@@ -6205,6 +6205,8 @@ ${round("b2", "c2", 2)}
     * isolated pairs peel away, clone cliques survive. The oracle
     * replays the SAME 4 peel rounds unrolled over q74's brute-Jaccard
     * edges, so the iterative decomposition is pinned round-for-round.
+    * `e0` is `MATERIALIZED`: DuckDB otherwise re-evaluates the
+    * all-pairs Jaccard once per CTE that reads it.
     */
   val q173KCore = HarnessQuery(
     "q173_kcore",
@@ -6226,11 +6228,11 @@ ${round("b2", "c2", 2)}
                      i -> array_to_string((regexp_split_to_array(trim(lower(text)), '\s+'))[i:i+2], ' ')))
                      AS sh
                  FROM documents),
-      e0 AS (SELECT a.doc_id AS lo, b.doc_id AS hi
-             FROM t a, t b
-             WHERE a.doc_id < b.doc_id
-               AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                   len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
+      e0 AS MATERIALIZED (SELECT a.doc_id AS lo, b.doc_id AS hi
+                          FROM t a, t b
+                          WHERE a.doc_id < b.doc_id
+                            AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+                                len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
       d0 AS (SELECT id, count(*) AS dg FROM (
                SELECT lo AS id FROM e0 UNION ALL SELECT hi FROM e0) GROUP BY 1),
       v1 AS (SELECT id FROM d0 WHERE dg >= 2),

@@ -1,13 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 import graft.ml.FeaturePipeline
 import graft.ml.FeaturePipeline.FeatureConfig
+import graft.pipeline.Processor
+import graft.sources.CsvSource
 import graft.streaming.StreamingScoring
 
 /** End-to-end streaming scoring: batch-fitted MLlib model applied to a
@@ -66,5 +74,65 @@ class StreamingScoringSpec extends SparkSpec {
     // Wonderland slot is one-hot; Unknown (row 3) was seen in training
     val v3 = rows(3L).getAs[Vector](4)
     assert(v3.size === 4)
+  }
+
+  /** The IP dimension as the pipeline builds it: a CSV under `dir`
+    * (one duplicated row for the dedup) through `CsvSource` and
+    * `Processor.cleanIpMap`. Returns the CSV's path and the lazy frame.
+    */
+  private def ipMapCsv(dir: Path): (Path, DataFrame) = {
+    val csv = dir.resolve("ip_to_country.csv")
+    Files.writeString(csv, Seq(
+      "lower_bound_ip_address,upper_bound_ip_address,country",
+      "0.0,99.0,Wonderland", "100.0,199.0,Oz", "100.0,199.0,Oz").mkString("\n"))
+    (csv, Processor.cleanIpMap(
+      CsvSource.read(spark, csv.toString, CsvSource.ipToCountry)))
+  }
+
+  private def fileScans(plan: SparkPlan): Seq[SparkPlan] =
+    plan.collectWithSubqueries { case f: FileSourceScanExec => f }
+
+  private val at = Timestamp.valueOf("2024-01-01 12:00:00")
+
+  test("a streaming query joins a snapshot of the IP dimension, not a per-trigger re-scan") {
+    val (csv, ranges) = ipMapCsv(Files.createTempDirectory("ipmap"))
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, Long, Timestamp, Timestamp)]
+    val tx = mem.toDF().toDF("user_id", "ip_address_int", "signup_time", "purchase_time")
+    val q = StreamingScoring.enrich(tx, ranges)
+      .select($"user_id", $"country")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("snapshot_out").start()
+    try {
+      mem.addData((1L, 50L, at, at), (2L, 150L, at, at))
+      q.processAllAvailable()
+      // the source is gone: a trigger that re-reads it fails
+      Files.delete(csv)
+      mem.addData((3L, 120L, at, at), (4L, 500L, at, at))
+      q.processAllAvailable()
+      val last = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+      assert(fileScans(last.executedPlan).isEmpty, last.executedPlan.treeString)
+    } finally q.stop()
+    val rows = spark.table("snapshot_out").as[(Long, String)].collect().toMap
+    assert(rows === Map(1L -> "Wonderland", 2L -> "Oz", 3L -> "Oz", 4L -> "Unknown"))
+  }
+
+  test("a static tx is enriched lazily: no job, and the plan still scans the IP source") {
+    val (_, ranges) = ipMapCsv(Files.createTempDirectory("ipmap"))
+    val tx = Seq((1L, 50L, at, at), (2L, 500L, at, at))
+      .toDF("user_id", "ip_address_int", "signup_time", "purchase_time")
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val enriched = try StreamingScoring.enrich(tx, ranges) finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get === 0)
+    assert(fileScans(enriched.queryExecution.sparkPlan).nonEmpty)
+    assert(enriched.select($"user_id", $"country").as[(Long, String)].collect().toMap ===
+      Map(1L -> "Wonderland", 2L -> "Unknown"))
   }
 }
