@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * bucketing: top bits of a uniform hash ([[Split]], [[Mixture]],
   * [[Curriculum]]), approximate quantile boundaries ([[Selection]],
   * [[Evaluation]]), fixed-width id ranges ([[TextAnalysis]],
-  * [[ScaleAudit]]); a bucket that is NOT order-aligned (Smote's `pmod`
-  * salt) simply defines a different, equally deterministic total
-  * order. A bad bucketing costs balance, never correctness.
+  * [[ScaleAudit]]); a bucket that is NOT order-aligned (a `pmod` hash
+  * salt; no caller uses one today) simply defines a different, equally
+  * deterministic total order. A bad bucketing costs balance, never
+  * correctness.
   *
   * Keys and buckets join back null-safely: a NULL key is a real group
   * to `groupBy` and `Window`, and a plain equi-join would silently drop

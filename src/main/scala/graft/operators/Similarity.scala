@@ -54,19 +54,6 @@ object Similarity {
   def dotDouble(a: Column, b: Column): Column =
     graft.functions.Native.plainDot(a, b)
 
-  /** Fixed-dimension double dot product as an unrolled element_at chain —
-    * no higher-order functions. Left-associated like the fold, hence
-    * bit-identical to [[dotDouble]]. Measured caveat: when the
-    * surrounding stage falls back to interpreted eval anyway, the
-    * 2·dim-node tree is ~2x SLOWER than the lambda fold — prefer
-    * [[dotDouble]] unless the stage provably stays in codegen (e.g.
-    * over pre-flattened scalar columns, as in [[blockedCosineNearDup]]).
-    */
-  def dotDoubleFixed(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))

@@ -1,33 +1,38 @@
 package graft.operators
 
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** T2: SMOTE oversampling (reference `transform_data.py:23,107-108`,
   * imblearn `SMOTE(random_state=42)`, k=5 neighbors).
   *
   * Semantics: the minority class is synthesized up to the majority size;
   * each synthetic sample lies on the segment between a minority row x and
-  * one of its k nearest minority neighbors x_nn:
+  * one of its k EXACT nearest minority neighbors x_nn:
   * `x + u * (x_nn - x)`, `u ~ U(0,1)`.
   *
-  * Spark-first plan (no driver loops, no cartesian product):
-  *   1. kNN candidates via `BucketedRandomProjectionLSH` self-join on the
-  *      minority rows only (shuffle bounded by bucket collisions, the
-  *      standard sub-quadratic kNN at scale);
-  *   2. per-row top-k by exact Euclidean distance (window over the LSH
-  *      candidate pairs);
-  *   3. deterministic copy-fanout via `explode(sequence(...))` to hit the
-  *      exact deficit count, neighbor choice + interpolation factor from
-  *      seeded `rand` — the one row-generating op in the engine, done
-  *      with a generator expression rather than a custom Generator
-  *      (SURVEY.md §2.10).
+  * Spark-first plan, one pass over each class (no driver loops, no
+  * index fit, no per-row shuffle):
+  *   1. [[neighbours]]: one aggregate gathers the class's
+  *      `(hash, id, features)` into one pool, and ONE projection per
+  *      class row computes from it both its k nearest other rows,
+  *      ordered by (squared Euclidean distance, id), and its rank in the
+  *      seeded `(xxhash64(id, seed), id)` order;
+  *   2. deterministic copy-fanout via `explode(sequence(...))` to hit the
+  *      exact deficit count: every row gets `deficit / n` copies, the
+  *      first `deficit % n` rows of the seeded order one more — the one
+  *      row-generating op in the engine, done with a generator
+  *      expression rather than a custom Generator (SURVEY.md §2.10);
+  *   3. neighbor choice and interpolation factor drawn per synthetic
+  *      row from seeded content hashes of `(id, copy)`.
   *
-  * Rows with no LSH bucket collision fall back to self-duplication
-  * (u·0 interpolation) so the output size is always exact.
+  * A class with at most k rows interpolates toward all of its other
+  * rows; a one-row class duplicates itself (u·0 interpolation), so the
+  * output size is always exact. A class whose estimated pool (rows ×
+  * (64 + 8 × feature width) bytes) exceeds
+  * `spark.sql.autoBroadcastJoinThreshold` (its 10 MB default when
+  * broadcasts are off) fails up front with the class named.
   *
   * Row identity: `idCol` (a unique key) is REQUIRED — the plan carries
   * the caller's stable id and holds NO persisted state, so the operator
@@ -38,14 +43,26 @@ import org.apache.spark.sql.functions._
   * fallback either leaks persisted state (contradicting this contract)
   * or silently mis-identifies rows under recompute. A caller without a
   * natural key should derive one deterministically (a content hash, or
-  * a key minted upstream of the pipeline).
+  * a key minted upstream of the pipeline). Every draw hashes that key
+  * rather than calling `rand`, so the output is a pure function of the
+  * input rows and the seed, whatever their partitioning and whichever
+  * join Spark picks for the pool.
   *
   * Features ride in an `array<double>` column; non-feature columns of a
   * synthetic row are inherited from its seed row; parity with imblearn is
-  * via invariants (balanced counts, synthetics on minority segments), not
-  * row-identity — PRNG streams differ (SURVEY.md §5.3).
+  * via invariants (balanced counts, synthetics on segments toward exact
+  * nearest neighbors), not row-identity — PRNG streams differ
+  * (SURVEY.md §5.3).
   */
 object Smote {
+
+  /** Rows and widest feature array of one class: what sizes its pool. */
+  private final case class ClassSize(rows: Long, width: Int)
+
+  /** Bytes of one pool entry besides its feature doubles (row header,
+    * hash, id, array header), for the pool-size estimate.
+    */
+  private val PoolRowBytes = 64L
 
   def smote(
       df: DataFrame,
@@ -53,99 +70,117 @@ object Smote {
       featuresCol: String,
       k: Int = 5,
       seed: Long = 42L,
-      numHashTables: Int = 3,
-      bucketLength: Double = 2.0,
       idCol: String): DataFrame = {
-    // driver collect bounded by the class count: one (label, count)
-    // row per distinct label
-    val counts = df.groupBy(col(labelCol)).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => r.get(0) -> r.getLong(1))
-    require(counts.length >= 2, "SMOTE needs at least two classes")
-    val nMaj = counts.map(_._2).max
+    // driver collect bounded by the class count: one (label, count,
+    // width) row per distinct label
+    val sizes = df.groupBy(col(labelCol))
+      .agg(count(lit(1)), coalesce(max(size(col(featuresCol))), lit(0)))
+      .collect().map(r => r.get(0) -> ClassSize(r.getLong(1), r.getInt(2)))
+    require(sizes.length >= 2, "SMOTE needs at least two classes")
+    val nMaj = sizes.map(_._2.rows).max
+    val minorities = sizes.filter(_._2.rows < nMaj)
+    // each class is one pool: bounded by the broadcast threshold, or by
+    // its 10 MB default when broadcasts are off
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val poolCap =
+      if (threshold > 0) threshold
+      else SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.defaultValue.get
+    minorities.foreach { case (classLabel, cls) =>
+      val bytes = cls.rows * (PoolRowBytes + 8L * cls.width)
+      require(bytes <= poolCap, s"SMOTE class $classLabel: ${cls.rows} rows x " +
+        s"${cls.width} features is about $bytes bytes of neighbour pool, over " +
+        s"the $poolCap-byte cap (spark.sql.autoBroadcastJoinThreshold); " +
+        "raise the threshold to synthesize this class")
+    }
     // imblearn 'auto': every non-majority class is synthesized up to the
     // majority size, each from its own neighborhood graph
-    counts.filter(_._2 < nMaj).zipWithIndex.foldLeft(df) {
-      case (acc, ((classLabel, nClass), i)) =>
+    minorities.zipWithIndex.foldLeft(df) {
+      case (acc, ((classLabel, cls), i)) =>
         acc.unionByName(syntheticRows(
-          df, labelCol, featuresCol, classLabel, nClass, nMaj - nClass,
-          k, seed + 101 * i, numHashTables, bucketLength, idCol))
+          df, labelCol, featuresCol, classLabel, cls.rows, nMaj - cls.rows,
+          k, seed + 101 * i, idCol))
     }
   }
 
-  /** Synthetic rows for one class: LSH kNN over the class's rows, exact
-    * copy-count fanout, seeded interpolation (see object doc).
+  /** Synthetic rows for one class: [[neighbours]], exact copy-count
+    * fanout, seeded interpolation (see object doc).
     */
   private def syntheticRows(
       df: DataFrame,
       labelCol: String,
       featuresCol: String,
       classLabel: Any,
-      nMin: Long,
+      nClass: Long,
       nNeeded: Long,
       k: Int,
       seed: Long,
-      numHashTables: Int,
-      bucketLength: Double,
       idCol: String): DataFrame = {
     val minority = df.filter(col(labelCol) === lit(classLabel))
-      .withColumn("__id", col(idCol))
-      .withColumn("__vec", array_to_vector(col(featuresCol)))
-
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("__vec").setOutputCol("__hashes")
-      .setNumHashTables(numHashTables)
-      .setBucketLength(bucketLength)
-      .setSeed(seed)
-    val model = lsh.fit(minority)
-
-    // candidate pairs sharing >=1 bucket; exact top-k by distance per row
-    val pairs = model
-      .approxSimilarityJoin(minority, minority, Double.MaxValue, "__dist")
-      .filter(col("datasetA.__id") =!= col("datasetB.__id"))
-      .select(
-        col("datasetA.__id").as("__id"),
-        col("datasetB." + featuresCol).as("__nn_feat"),
-        col("__dist"))
-    val wk = Window.partitionBy(col("__id")).orderBy(col("__dist"), col("__nn_feat"))
-    val neighbors = pairs
-      .withColumn("__rk", row_number().over(wk))
-      .filter(col("__rk") <= k)
-      .groupBy(col("__id"))
-      .agg(collect_list(col("__nn_feat")).as("__nns"))
-
-    // fan out each minority row to its exact synthetic copy count: base
-    // copies for all, one extra for the first (nNeeded % nMin) rows in a
-    // seeded pseudo-random global order — (salt, hash, id), ranked by
-    // [[GlobalRank.rowNumber]] with the `pmod` salt as its bucket, so no
-    // single partition ever holds the whole minority class. The salt is
-    // not order-aligned with the hash; it defines the order's first key.
-    val base = nNeeded / nMin
-    val extra = nNeeded % nMin
-    val salts = 64
-    val salted = minority
-      .join(neighbors, Seq("__id"), "left")
-      .withColumn("__salt", pmod(xxhash64(col("__id"), lit(seed)), lit(salts.toLong)))
-    val fanned = GlobalRank.rowNumber(salted, keys = Nil, bucket = Seq(col("__salt")),
-        order = Seq(xxhash64(col("__id"), lit(seed + 1)), col("__id")))
+    val base = nNeeded / nClass
+    val extra = nNeeded % nClass
+    // uniform [0, 1) from the top 53 bits of a seeded hash of the copy
+    val draw = (salt: Long) => shiftrightunsigned(
+      xxhash64(col(idCol), col("__copy"), lit(seed + salt)), 11).cast("double") /
+      lit(9007199254740992.0)
+    val nnCount = size(col("__nns"))
+    neighbours(minority, idCol, featuresCol, k, seed)
       .withColumn("__copies",
-        lit(base) + when(col("__rn") <= extra, 1L).otherwise(0L))
+        lit(base) + when(col("__rank") <= extra, 1L).otherwise(0L))
       .filter(col("__copies") > 0)
       .withColumn("__copy", explode(sequence(lit(1L), col("__copies"))))
-
-    // materialize rand draws once per synthetic row — referencing a rand
-    // Column twice (or inside a higher-order lambda) can re-evaluate it
-    val nnCount = coalesce(size(col("__nns")), lit(0))
-    val synthetic = fanned
-      .withColumn("__pick", floor(rand(seed + 2) * nnCount).cast("int"))
-      .withColumn("__u", rand(seed + 3))
+      .withColumn("__u", draw(3))
       .withColumn("__nn",
-        when(nnCount > 0, element_at(col("__nns"), col("__pick") + 1))
+        when(nnCount > 0,
+          element_at(col("__nns"), floor(draw(2) * nnCount).cast("int") + 1)
+            .getField("f"))
           .otherwise(col(featuresCol)))
       .withColumn(featuresCol,
         zip_with(col(featuresCol), col("__nn"),
           (x, y) => x + col("__u") * (y - x)))
       .select(df.columns.map(col): _*)
+  }
 
-    synthetic
+  /** `cls` (one class's rows, `idCol` unique) plus, for each row:
+    *   - `__nns`: its `k` nearest OTHER rows of `cls` as
+    *     `array<struct<d, id, f>>`, ordered by (d, id) where `d` is the
+    *     double squared Euclidean distance, summed left to right over
+    *     the features, and `f` the neighbor's features — all other rows
+    *     when the class has at most k+1. A null distance (a null or
+    *     missing feature on either side) counts as +Infinity, so such a
+    *     row sorts after every row with a distance;
+    *   - `__rank`: its 1-based rank in `(xxhash64(id, seed), id)` order.
+    *
+    * One global aggregate gathers the class's `(hash, id, features)`
+    * into a single pool row, crossed with every class row; one
+    * projection per row reads the pool. Spark broadcasts the pool row
+    * when `spark.sql.autoBroadcastJoinThreshold` allows (a projection
+    * over the class's own partitions, no shuffle) and runs the cross
+    * join as a cartesian product when broadcasts are off. The pool
+    * holds the whole class in one row, so the caller bounds the class
+    * size ([[smote]] caps it by that threshold). The work is
+    * O(n²·dim) per class: every row is compared with every other.
+    */
+  def neighbours(
+      cls: DataFrame,
+      idCol: String,
+      featuresCol: String,
+      k: Int,
+      seed: Long): DataFrame = {
+    val id = col(idCol)
+    val hashed = cls.withColumn("__h", xxhash64(id, lit(seed)))
+    val pool = hashed.agg(collect_list(struct(col("__h").as("h"), id.as("id"),
+      col(featuresCol).as("f"))).as("__pool"))
+    val entries = col("__pool")
+    val dist = (f: Column) => coalesce(
+      aggregate(zip_with(col(featuresCol), f, (x, y) => (x - y) * (x - y)),
+        lit(0.0), (acc, t) => acc + t),
+      lit(Double.PositiveInfinity))
+    val nearest = slice(array_sort(transform(filter(entries, p => p("id") =!= id),
+      p => struct(dist(p("f")).as("d"), p("id").as("id"), p("f").as("f")))), 1, k)
+    val before = size(filter(entries,
+      p => p("h") < col("__h") || (p("h") === col("__h") && p("id") < id)))
+    hashed.crossJoin(pool)
+      .select(cls.columns.map(col) :+ nearest.as("__nns") :+
+        (before + 1L).as("__rank"): _*)
   }
 }

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.atomic.AtomicReference
+
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
@@ -72,10 +74,10 @@ object Processor {
     * ([[graft.Materialize.cut]]), and so is every frame inside that
     * more than one action reads — the split input (the rank window and
     * its offsets aggregate), the train side (each estimator fit and
-    * the transform) and the slim train features (SMOTE's class counts,
-    * LSH fit and both sides of its self-join). Those intermediate cuts
-    * are released before returning, on failure too, so the only blocks
-    * left are the two returned frames'.
+    * the transform) and the slim train features (SMOTE's class sizes,
+    * each class's pool aggregate and its projection). Those
+    * intermediate cuts are released before returning, on failure too,
+    * so the only blocks left are the two returned frames'.
     */
   def preprocessDataset(
       df: DataFrame,
@@ -174,51 +176,75 @@ object Processor {
       .withColumn("__row_id", xxhash64(creditRenamed.columns.map(col): _*))
     val creditNums = credit.columns.filterNot(c => c == "Class").toSeq
 
-    val (fraudPrep, creditPrep) = alongside(
-      preprocessDataset(
+    val prepped = alongside(Seq(
+      () => preprocessDataset(
         fraudX, cfg, cfg.numericalFeatures, cfg.categoricalFeatures, "user_id"),
-      preprocessDataset(creditX, cfg, creditNums, Seq.empty, "__row_id"))
-    (fraudPrep, creditPrep) match {
-      case (Success(f), Success(c)) => PipelineOutputs(f, c)
-      case _ =>
-        Seq(fraudPrep, creditPrep).foreach(_.foreach { p =>
-          Materialize.release(p.train); Materialize.release(p.test) })
-        val failures = Seq(fraudPrep, creditPrep).collect { case Failure(e) => e }
-        failures.tail.foreach(failures.head.addSuppressed)
-        throw failures.head
+      () => preprocessDataset(creditX, cfg, creditNums, Seq.empty, "__row_id")))
+    if (prepped.exists(_.isFailure)) {
+      prepped.foreach(_.foreach { p =>
+        Materialize.release(p.train); Materialize.release(p.test) })
+      throwFirstFailure(prepped)
     }
+    PipelineOutputs(prepped(0).get, prepped(1).get)
   }
 
-  /** Runs `a` on the calling thread and `b` on a fresh thread, and
-    * returns once both have finished. A fresh thread, not a pooled one,
-    * because Spark's local properties are inherited when a thread is
-    * created: a pool thread carries those of whichever caller made it.
+  /** Runs the first task on the calling thread and each other one on a
+    * fresh thread, and returns once all have finished, their results in
+    * task order. Fresh threads, not pooled ones, because Spark's local
+    * properties (job group, description, scheduler pool) are inherited
+    * when a thread is created: a pool thread carries those of whichever
+    * caller made it.
     */
-  private def alongside[A, B](a: => A, b: => B): (Try[A], Try[B]) = {
-    @volatile var rb: Try[B] = Failure(new IllegalStateException("branch did not run"))
-    val t = new Thread(() => rb = try Success(b) catch { case e: Throwable => Failure(e) },
-      "graft-ep1-branch")
-    t.setDaemon(true)
-    t.start()
-    val ra = try Try(a) finally t.join()
-    (ra, rb)
+  private def alongside[A](tasks: Seq[() => A]): Seq[Try[A]] = {
+    val rest = tasks.drop(1).map { task =>
+      val result = new AtomicReference[Try[A]](
+        Failure(new IllegalStateException("task did not run")))
+      val t = new Thread(
+        () => result.set(try Success(task()) catch { case e: Throwable => Failure(e) }),
+        "graft-ep1-task")
+      t.setDaemon(true)
+      t.start()
+      (t, result)
+    }
+    val first = try tasks.headOption.map(task => Try(task())).toSeq
+      finally rest.foreach(_._1.join())
+    first ++ rest.map(_._2.get)
   }
 
+  /** Throws the first failure among `results`, the later ones added to
+    * it as suppressed; returns when there is none.
+    */
+  private def throwFirstFailure(results: Seq[Try[_]]): Unit =
+    results.collect { case Failure(e) => e } match {
+      case first +: others =>
+        others.foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
+
+  /** Writes the six parquet sinks under `outDir`, all at the same time
+    * (see [[runPipeline]] for the threads). Every write has finished
+    * before this returns or throws; when any fails, the first failure
+    * is thrown with the others suppressed.
+    */
   def writeOutputs(out: PipelineOutputs, outDir: String): Unit = {
     val spark = out.fraud.train.sparkSession
     import spark.implicits._
-    out.fraud.train.write.mode("overwrite").parquet(s"$outDir/fraud_train")
-    out.fraud.test.write.mode("overwrite").parquet(s"$outDir/fraud_test")
-    out.creditcard.train.write.mode("overwrite").parquet(s"$outDir/credit_train")
-    out.creditcard.test.write.mode("overwrite").parquet(s"$outDir/credit_test")
     // the reference's feature-name lists (transform_data.py:150-161) as
     // their own named sinks
-    out.fraud.featureNames.zipWithIndex.map { case (n, i) => (i.toLong, n) }
-      .toDF("idx", "feature_name")
-      .write.mode("overwrite").parquet(s"$outDir/fraud_feature_names")
-    out.creditcard.featureNames.zipWithIndex.map { case (n, i) => (i.toLong, n) }
-      .toDF("idx", "feature_name")
-      .write.mode("overwrite").parquet(s"$outDir/credit_feature_names")
+    val names = (p: PreppedDataset) =>
+      p.featureNames.zipWithIndex.map { case (n, i) => (i.toLong, n) }
+        .toDF("idx", "feature_name")
+    val sinks = Seq(
+      "fraud_train" -> out.fraud.train,
+      "fraud_test" -> out.fraud.test,
+      "credit_train" -> out.creditcard.train,
+      "credit_test" -> out.creditcard.test,
+      "fraud_feature_names" -> names(out.fraud),
+      "credit_feature_names" -> names(out.creditcard))
+    throwFirstFailure(alongside(sinks.map { case (name, frame) =>
+      () => frame.write.mode("overwrite").parquet(s"$outDir/$name")
+    }))
   }
 
   /** EP2 (processor.py:21-54): the EDA fan-out as named result frames

@@ -615,13 +615,13 @@ object EvalQueries {
              JOIN w${r - 1} wa ON wa.item = s.a
              JOIN w${r - 1} wb ON wb.item = s.b
              GROUP BY 1),
-      u$r AS (SELECT d.item,
+      u$r AS MATERIALIZED (SELECT d.item,
                greatest(floor(CAST(COALESCE(wi.wins, 0) AS DOUBLE)
                  / CAST(d.denom AS DOUBLE) * 1e9) / 1e9, 1e-9) AS w
              FROM d$r d LEFT JOIN wins wi ON wi.item = d.item),
       s$r AS (SELECT CAST(sum(CAST(w AS DECIMAL(38,9))) AS DOUBLE) AS s
               FROM u$r),
-      w$r AS (SELECT item,
+      w$r AS MATERIALIZED (SELECT item,
                 greatest(floor(u.w * kk.k / s$r.s * 1e9) / 1e9, 1e-9) AS w
               FROM u$r u, s$r, kk)"""
       }.mkString(",", ",", "")

@@ -72,6 +72,42 @@ object MlQueries {
       FROM c ORDER BY 1
     """.trim))
 
+  /** T2: SMOTE's neighbour sets — each minority row's 5 exact nearest
+    * minority rows in order, through the same [[Smote.neighbours]] the
+    * synthesis reads. Ordered by the double squared L2, each term
+    * `(x - y) * (x - y)` summed left to right over the 64 dimensions,
+    * then id: both engines do the same IEEE operations in the same
+    * order, so they rank the same totals. `posexplode_outer` adds no
+    * `size > 0` filter, so the pool projection is not evaluated again
+    * inside the join condition.
+    */
+  val q457SmoteNeighbours = HarnessQuery(
+    "q457_smote_neighbours",
+    (spark, dir) => {
+      val minority = Tables.embeddings(spark, dir)
+        .filter(col("label") === 0)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("feat"))
+      Smote.neighbours(minority, "vec_id", "feat", k = 5, seed = 42L)
+        .select(col("vec_id"), posexplode_outer(col("__nns")))
+        .select(col("vec_id"), (col("pos") + 1).as("rank"),
+          col("col.id").as("nn_id"))
+        .orderBy(col("vec_id"), col("rank"))
+    },
+    Some("""
+      WITH m AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS f
+                 FROM embeddings WHERE label = 0),
+      d2 AS (SELECT a.vec_id, b.vec_id AS nn_id,
+               list_reduce(list_transform(range(1, len(a.f) + 1),
+                   i -> (a.f[i] - b.f[i]) * (a.f[i] - b.f[i])),
+                 (s, t) -> s + t) AS dist
+             FROM m a JOIN m b ON a.vec_id <> b.vec_id),
+      r AS (SELECT vec_id, nn_id,
+              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, nn_id) AS rank
+            FROM d2)
+      SELECT vec_id, CAST(rank AS INT) AS rank, nn_id
+      FROM r WHERE rank <= 5 ORDER BY vec_id, rank
+    """.trim))
+
   /** M1-M5: the full featurization pipeline over customer — output width
     * is 1 scaled numeric + one slot per training-seen segment (the
     * dropped keep-slot reproduces sklearn handle_unknown='ignore').
@@ -263,7 +299,7 @@ object MlQueries {
     """.trim))
 
   def all: Seq[HarnessQuery] = Seq(
-    q40SplitSummary, q41UndersampleCounts, q42SmoteCounts,
+    q40SplitSummary, q41UndersampleCounts, q42SmoteCounts, q457SmoteNeighbours,
     q43FeaturePipeline, q44FeatureNames, q85Ep1Pipeline, q105KFold,
     q124GroupKFold)
 }

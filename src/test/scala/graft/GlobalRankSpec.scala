@@ -9,7 +9,7 @@ import graft.operators.GlobalRank
 /** GlobalRank — the two-level rank and running sum must equal the naive
   * single window over (keys; bucket, order…) on every input shape: null
   * keys, heavy ties, a single bucket, an empty frame, and a bucket that
-  * is not aligned with the order (Smote's `pmod` salt).
+  * is not aligned with the order (a `pmod` hash salt).
   */
 class GlobalRankSpec extends SparkSpec {
   import spark.implicits._

@@ -10,7 +10,7 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{col, size}
+import org.apache.spark.sql.functions.{col, lit, raise_error, size, when}
 
 import graft.pipeline.Processor
 import graft.sources.{CsvSource, PipelineConfig}
@@ -216,6 +216,56 @@ class ProcessorSpec extends SparkSpec {
       assert((persistedRdds -- before).isEmpty,
         s"a failed runPipeline left blocks: ${persistedRdds -- before}")
     }
+  }
+
+  private def releaseAll(o: Processor.PipelineOutputs): Unit =
+    Seq(o.fraud.train, o.fraud.test, o.creditcard.train, o.creditcard.test)
+      .foreach(Materialize.release)
+
+  private val sinkNames = Seq("fraud_train", "fraud_test", "credit_train",
+    "credit_test", "fraud_feature_names", "credit_feature_names")
+
+  test("writeOutputs writes every sink, each write job in the caller's job group") {
+    val out = Processor.runPipeline(spark, cfg)
+    val dir = Files.createTempDirectory("graft_sinks")
+    val sc = spark.sparkContext
+    sc.setJobGroup("ep1-sinks", "EP1 sinks")
+    val (written, log) =
+      try withJobLog(Processor.writeOutputs(out, dir.toString))
+      finally { sc.clearJobGroup(); releaseAll(out) }
+    assert(written.isSuccess, written)
+    val groups = log.groups.asScala.toSeq
+    assert(groups.nonEmpty && groups.forall(_ == "ep1-sinks"), groups.distinct)
+    sinkNames.foreach(n => assert(Files.exists(dir.resolve(n).resolve("_SUCCESS")), n))
+  }
+
+  test("writeOutputs: a failing sink throws only after no write job is still running") {
+    val out = Processor.runPipeline(spark, cfg)
+    // two sinks fail when their job runs: the earlier one's failure is
+    // thrown, the later one's suppressed into it
+    val failing = (d: DataFrame, msg: String) => d.withColumn("label",
+      when(col("label") >= 0, raise_error(lit(msg))).otherwise(col("label")))
+    val bad = out.copy(
+      fraud = out.fraud.copy(test = failing(out.fraud.test, "fraud test sink failed")),
+      creditcard = out.creditcard.copy(
+        test = failing(out.creditcard.test, "credit test sink failed")))
+    val dir = Files.createTempDirectory("graft_sinks")
+    val (written, log) =
+      try withJobLog(Processor.writeOutputs(bad, dir.toString))
+      finally releaseAll(out)
+    val messages = (t: Throwable) =>
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val e = written.failed.get
+    assert(messages(e).contains("fraud test sink failed"), messages(e))
+    assert(!messages(e).contains("credit test sink failed"), messages(e))
+    assert(e.getSuppressed.exists(messages(_).contains("credit test sink failed")),
+      e.getSuppressed.map(messages).toSeq)
+    assert(log.running.isEmpty, s"jobs still running: ${log.running}")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds
+      .filter(log.started.contains).isEmpty)
+    // the sinks that did not fail were all written
+    sinkNames.filterNot(_.endsWith("_test"))
+      .foreach(n => assert(Files.exists(dir.resolve(n).resolve("_SUCCESS")), n))
   }
 
   test("runPipeline in reliable checkpoint mode matches local mode") {

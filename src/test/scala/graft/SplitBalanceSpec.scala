@@ -119,7 +119,7 @@ class SplitBalanceSpec extends SparkSpec {
       (81 to 90).map(i => (i.toLong, 2)))
       .map { case (id, lbl) => (id, lbl, Array(id * 1.0, id * 3.0)) }
       .toDF("id", "label", "f")
-    val s = Smote.smote(tri, "label", "f", k = 3, seed = 42L, bucketLength = 50.0,
+    val s = Smote.smote(tri, "label", "f", k = 3, seed = 42L,
       idCol = "id")
     val counts = s.groupBy("label").count().collect()
       .map(x => x.getInt(0) -> x.getLong(1)).toMap
@@ -131,7 +131,7 @@ class SplitBalanceSpec extends SparkSpec {
       .select($"id", $"label", $"f")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Smote.smote(feat, "label", "f", k = 3, seed = 42L,
-      bucketLength = 50.0, idCol = "id").count()
+      idCol = "id").count()
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
       s"smote leaked persisted RDDs: ${after -- before}")
@@ -166,7 +166,7 @@ class SplitBalanceSpec extends SparkSpec {
     val feat = df.withColumn("f", array($"x", $"x" * 2.0))
       .select($"id", $"label", $"f")
     val s = Smote.smote(feat, "label", "f", k = 3, seed = 42L,
-      bucketLength = 50.0, idCol = "id")
+      idCol = "id")
     val counts = s.groupBy("label").count().collect()
       .map(x => x.getInt(0) -> x.getLong(1)).toMap
     assert(counts === Map(0 -> 80L, 1 -> 80L))
